@@ -1805,7 +1805,15 @@ def q71_token_budget(spark, sf_dir):
     lang=='en' pseudo-labels over the SAME md5 bucket space — per-class
     histograms → NB log-odds weight table + log-prior bias → per-doc
     logit and probability, the whole train+score chain mirrored in SQL
-    off the oracle's existing feature CTE."""
+    off the oracle's existing feature CTE.
+
+    Both models share one md5 feature plan: building it fires one
+    (bucket, class) histogram collect (memoized per plan), and execution
+    scores DSIR and NB together — one broadcast table with both weight
+    columns, one per-doc aggregate with two sums, one join back. Same
+    integer histograms and weight math as ``dsir_weights`` /
+    ``train_nb`` + ``classifier_score``, so the same rounded outputs."""
+    from aggo_spark.functions.scalar_memo import plan_scalar
     from aggo_spark.operators import classify, sampling
 
     docs = _t(spark, sf_dir, "documents")
@@ -1816,24 +1824,47 @@ def q71_token_budget(spark, sf_dir):
         docs, ["lang"], 10,
         order_col=sampling.hash_order(F.col("doc_id").cast("string"))
     ).select("doc_id", F.lit(True).alias("strat_kept"))
-    dsir = sampling.dsir_weights(
-        docs, docs.filter(F.col("lang") == "en"),
-        n_buckets=1024, hash_fn="md5",
-    ).select("doc_id", F.round("log_w", 6).alias("dsir_log_w"))
-    nb_w, nb_b = classify.train_nb(
-        docs.withColumn(
-            "label", F.when(F.col("lang") == "en", 1).otherwise(0)),
-        n_buckets=1024, hash_fn="md5")
-    nb = classify.classifier_score(
-        docs, nb_w, nb_b, n_buckets=1024, hash_fn="md5"
-    ).select("doc_id", F.col("score").alias("nb_logit"),
-             F.col("prob").alias("nb_prob"))
+    # DSIR (target: the English docs) and NB (label: lang == 'en') read
+    # the same md5 features, so one (bucket, class) histogram collect
+    # gives both: corpus = pos + neg, DSIR target = pos, NB classes =
+    # pos / neg, NB bias from the per-class doc counts
+    feats = sampling.hashed_ngram_features(docs, n_buckets=1024,
+                                           hash_fn="md5")
+    lab = docs.select(
+        F.col("doc_id").alias("id"),
+        F.when(F.col("lang") == "en", 1).otherwise(0).alias("__y"))
+    pos, neg, n_docs = plan_scalar(
+        docs, "q71:classhist:text:doc_id:1024:2:md5",
+        lambda: classify._class_histograms(feats, lab),
+        cache_if=lambda h: bool(h[0] or h[1]))
+    corpus = {b: pos.get(b, 0) + neg.get(b, 0) for b in set(pos) | set(neg)}
+    nb_w, nb_b = classify._nb_model(pos, neg, n_docs, 1.0, 1024)
+    dsir_w = dict(sampling._log_ratio_weights(pos, corpus, 1.0, 1024,
+                                              corpus))
+    w = spark.createDataFrame([(b, dsir_w[b], nw) for b, nw in nb_w],
+                              "bucket long, dw double, nw double")
+    scored = (
+        feats.join(F.broadcast(w), "bucket")
+        .groupBy("id")
+        .agg(F.sum(F.col("c") * F.col("dw")).alias("log_w"),
+             F.sum(F.col("c") * F.col("nw")).alias("nb_s"))
+    )
+    logit = F.lit(nb_b) + F.coalesce("nb_s", F.lit(0.0))
+    dsir_nb = (
+        docs.select("doc_id")
+        .join(scored.withColumnRenamed("id", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.round(F.coalesce("log_w", F.lit(0.0)), 6).alias("dsir_log_w"),
+            F.round(logit, 6).alias("nb_logit"),
+            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
+            .alias("nb_prob"))
+    )
     return (
         budget.select("doc_id", "source", "lang", "n_chars",
                       "cum_tokens", "kept")
         .join(strat, "doc_id", "left")
-        .join(dsir, "doc_id")
-        .join(nb, "doc_id")
+        .join(dsir_nb, "doc_id")
         .withColumn("strat_kept", F.coalesce("strat_kept", F.lit(False)))
         .orderBy("doc_id")
     )
@@ -3388,6 +3419,16 @@ def oracle_sql() -> dict[str, str]:
     lang_scores, lang_pred = _lang_scores_sql()
     _lang_greatest = "greatest(" + ", ".join(
         f"s_{l}" for l in text.LANG_STOPWORDS) + ")"
+    # the per-language stopword lists as (lang, word) rows and per-doc hit
+    # columns over them (q61's unnest form of lang_scores)
+    _stopword_rows = ", ".join(
+        f"('{l}', '{w}')" for l, ws in text.LANG_STOPWORDS.items()
+        for w in dict.fromkeys(ws))
+    _lang_hit_counts = ", ".join(
+        f"count(CASE WHEN lang = '{l}' THEN 1 END) AS h_{l}"
+        for l in text.LANG_STOPWORDS)
+    _lang_hit_cols = ", ".join(
+        f"coalesce(h_{l}, 0) AS s_{l}" for l in text.LANG_STOPWORDS)
     _fixture_whens = " ".join(
         f"WHEN {i} THEN '{t}'"
         for i, t in enumerate(_CJK_FIXTURE_TEXTS))
@@ -4699,16 +4740,21 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_copies
             FROM documents GROUP BY 2 ORDER BY 1
         """,
+        # distinct char 5-shingles in unnest form: DuckDB runs a
+        # per-element list_transform lambda ~10x slower on this step
         "q31_dedup_jaccard": f"""
-            WITH base AS (
-              SELECT doc_id AS id, list_distinct({_SHINGLES5.format(n=norm_doc)}) AS sh
-              FROM documents),
-            exploded AS (
-              SELECT id, len(sh) AS n_sh, unnest(sh) AS s FROM base),
+            WITH d AS (SELECT doc_id AS id, {norm_doc} AS n FROM documents),
+            ex AS (
+              SELECT DISTINCT id, substr(n, i, 5) AS s
+              FROM (SELECT id, n,
+                           unnest(range(1, greatest(len(n) - 4, 0) + 1)) AS i
+                    FROM d)),
+            nsh AS (SELECT id, count(*) AS n_sh FROM ex GROUP BY id),
             rare AS (
-              SELECT s FROM exploded GROUP BY s HAVING count(*) <= 100),
+              SELECT s FROM ex GROUP BY s HAVING count(*) <= 100),
             filtered AS (
-              SELECT e.* FROM exploded e JOIN rare USING (s)),
+              SELECT ex.id, ex.s, nsh.n_sh
+              FROM ex JOIN rare USING (s) JOIN nsh USING (id)),
             pairs AS (
               SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS n_a, b.n_sh AS n_b,
                      count(*) AS common
@@ -4858,18 +4904,26 @@ def oracle_sql() -> dict[str, str]:
                    (d.doc_id = coalesce(c.component, d.doc_id)) AS is_representative
             FROM documents d LEFT JOIN comps c ON d.doc_id = c.node
         """,
+        # stopword hits per (doc, language) in unnest form — one token
+        # explode joined to a (lang, word) table — instead of one
+        # list_filter lambda per language, which DuckDB runs ~10x slower
         "q61_curation_pipeline": f"""
             WITH t AS (
               SELECT doc_id, source, text, {tok_doc} AS tok FROM documents),
+            sw AS (SELECT * FROM (VALUES {_stopword_rows}) v(lang, w)),
+            hits AS (
+              SELECT doc_id, {_lang_hit_counts}
+              FROM (SELECT doc_id, unnest(tok) AS w FROM t) JOIN sw USING (w)
+              GROUP BY doc_id),
             m AS (
               SELECT doc_id, source, text,
                      len(tok) AS n_tok,
                      length(text) AS n_chars,
                      length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha_chars,
-                     len(list_filter(tok, t -> list_contains({_STOP_EN_SQL}, t))) AS stop_hits,
+                     coalesce(h_en, 0) AS stop_hits,
                      coalesce(list_sum(list_transform(tok, t -> len(t))), 0) AS total_len,
                      tok
-              FROM t),
+              FROM t LEFT JOIN hits USING (doc_id)),
             scored AS (
               SELECT doc_id, source, text, n_tok, tok,
                      round(0.3 * (CASE WHEN n_chars > 0 THEN CAST(alpha_chars AS DOUBLE) / n_chars ELSE 0.0 END)
@@ -4878,7 +4932,9 @@ def oracle_sql() -> dict[str, str]:
                                           AND CAST(total_len AS DOUBLE) / n_tok <= 12.0 THEN 1.0 ELSE 0.0 END)
                            + 0.2 * (CASE WHEN n_tok >= 10 THEN 1.0 ELSE CAST(n_tok AS DOUBLE) / 10.0 END), 6) AS q
               FROM m),
-            s2 AS (SELECT *, {lang_scores} FROM scored),
+            s2 AS (
+              SELECT scored.*, {_lang_hit_cols}
+              FROM scored LEFT JOIN hits USING (doc_id)),
             g2 AS (SELECT *, {_lang_greatest} AS g FROM s2),
             langed AS (SELECT *, {lang_pred} AS pred_lang FROM g2),
             kept AS (

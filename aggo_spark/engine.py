@@ -7,7 +7,8 @@ one path: pipeline JSON → DataFrame logical plan → Catalyst → Tungsten.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping
+from collections import ChainMap
+from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,7 +21,10 @@ class Engine:
 
     ``collections`` registers named DataFrames for ``$lookup`` /
     ``$unionWith`` (the reference passes JS arrays by reference;
-    we pass DataFrames by name).
+    we pass DataFrames by name). The mapping is read through, not copied,
+    so a lazy one (``load_tables``) opens only the collections a pipeline
+    names; ``register`` layers over it and never writes into it. Rebind
+    a name with ``register``, which also drops cached plans.
     """
 
     def __init__(
@@ -29,7 +33,7 @@ class Engine:
         sample_seed: int = 42,
         facet_reuse_source: bool = True,
     ) -> None:
-        self.collections: dict[str, DataFrame] = dict(collections or {})
+        self.collections: ChainMap[str, DataFrame] = ChainMap({}, collections or {})
         self.sample_seed = sample_seed
         # $facet: materialize the facet input once (lazy localCheckpoint)
         # so N branches scan the source once, matching MongoDB's

@@ -34,7 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sampling import _hashed_gram_rows, hashed_ngram_features
+from .sampling import _hashed_gram_rows, _log_ratio_weights, hashed_ngram_features
 
 __all__ = [
     "train_nb",
@@ -55,6 +55,54 @@ def _check(label_col: str, n_buckets: int, alpha: float | None = None):
             f"and broadcast), got {n_buckets}")
     if alpha is not None and alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
+
+
+def _class_histograms(
+    rows: DataFrame, lab: DataFrame,
+) -> tuple[dict[int, int], dict[int, int], dict]:
+    """Per-class bucket histograms and per-class doc counts from ONE
+    collect. ``rows`` holds ``(id, bucket, c)`` feature rows (``c`` the
+    occurrence count; 1 per gram row works too), ``lab`` one ``(id, __y)``
+    row per document. The doc counts ride along as bucket −1 rows (one
+    per labelled doc — the :func:`train_lr` bias trick), so no second job
+    counts the labels.
+
+    Returns ``(pos, neg, docs)``: ``pos`` sums ``c`` by bucket over
+    ``__y == 1``, ``neg`` over every other label (NULL included), and
+    ``docs`` maps each label value to its doc count. ``pos + neg`` is the
+    whole-corpus histogram."""
+    hist = (
+        rows.join(lab, "id").select("bucket", "__y", "c")
+        .unionByName(lab.select(F.lit(-1).cast("long").alias("bucket"),
+                                "__y", F.lit(1).cast("long").alias("c")))
+        .groupBy("bucket", "__y").agg(F.sum("c").alias("n"))
+        .collect()
+    )
+    pos: dict[int, int] = {}
+    neg: dict[int, int] = {}
+    docs: dict = {}
+    for r in hist:
+        b, y, cnt = r["bucket"], r["__y"], r["n"]
+        if b == -1:
+            docs[y] = cnt
+        else:
+            side = pos if y == 1 else neg
+            side[b] = side.get(b, 0) + cnt
+    return pos, neg, docs
+
+
+def _nb_model(
+    pos: dict[int, int], neg: dict[int, int], docs: dict,
+    alpha: float, n_buckets: int,
+) -> tuple[list[tuple[int, float]], float]:
+    """Naive Bayes log-odds weight rows (sorted by bucket) and log-prior
+    bias from integer class histograms and per-class doc counts."""
+    if not docs.get(1) or not docs.get(0):
+        raise ValueError(
+            f"training needs both classes; got doc counts {docs}")
+    w_rows = _log_ratio_weights(pos, neg, alpha, n_buckets,
+                                sorted(set(pos) | set(neg)))
+    return w_rows, math.log(docs[1] / docs[0])
 
 
 def train_nb(
@@ -82,9 +130,10 @@ def train_nb(
     and with ``hash_fn="md5"`` by a SQL engine (the q71 DSIR oracle
     machinery). Also the standard warm-start init for :func:`train_lr`.
 
-    Plan: ONE aggregate over the gram stream — ``groupBy(bucket,
-    label)`` counts, ≤ 2·n_buckets rows collected (the dsir_weights
-    histogram class) — plus a 2-row doc-count aggregate for the bias.
+    Plan: ONE collect — a ``groupBy(bucket, label)`` aggregate over the
+    gram stream, ≤ 2·n_buckets rows (the dsir_weights histogram class),
+    with the per-class doc counts for the bias riding along as sentinel
+    bucket rows (:func:`_class_histograms`).
 
     Unseen buckets (r10, ADVICE): by default inference gives buckets
     absent from training weight 0 — a DELIBERATE deviation from exact
@@ -101,35 +150,16 @@ def train_nb(
     grams = _hashed_gram_rows(df, text_col, id_col, n_buckets, n, hash_fn)
     lab = df.select(F.col(id_col).alias("id"),
                     F.col(label_col).cast("int").alias("__y"))
-    hist = (
-        grams.join(lab, "id")
-        .groupBy("bucket", "__y").agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    pos: dict[int, int] = {}
-    neg: dict[int, int] = {}
-    for r in hist:
-        (pos if r["__y"] == 1 else neg)[r["bucket"]] = r["n"]
-    n_pos, n_neg = sum(pos.values()), sum(neg.values())
-    docs = {r["__y"]: r["d"] for r in lab.groupBy("__y")
-            .agg(F.count(F.lit(1)).alias("d")).collect()}
-    if not docs.get(1) or not docs.get(0):
-        raise ValueError(
-            f"training needs both classes; got doc counts {docs}")
-    denom_p = n_pos + alpha * n_buckets
-    denom_n = n_neg + alpha * n_buckets
-    w_rows = [
-        (b,
-         math.log((pos.get(b, 0) + alpha) / denom_p)
-         - math.log((neg.get(b, 0) + alpha) / denom_n))
-        for b in sorted(set(pos) | set(neg))
-    ]
-    bias = math.log(docs[1] / docs[0])
+    pos, neg, docs = _class_histograms(
+        grams.withColumn("c", F.lit(1).cast("long")), lab)
+    w_rows, bias = _nb_model(pos, neg, docs, alpha, n_buckets)
     spark = df.sparkSession
     wdf = spark.createDataFrame(w_rows, "bucket long, weight double")
     if return_unseen:
         # exact smoothed NB's weight for any bucket with zero counts in
         # BOTH classes: log(alpha/denom_p) - log(alpha/denom_n)
+        denom_p = sum(pos.values()) + alpha * n_buckets
+        denom_n = sum(neg.values()) + alpha * n_buckets
         return wdf, float(bias), float(math.log(denom_n / denom_p))
     return wdf, float(bias)
 

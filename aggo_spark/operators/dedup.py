@@ -90,8 +90,9 @@ def ngram_jaccard_pairs(
 
     Plan shape (scales to 100 TB):
       1. explode distinct k-shingles           (narrow)
-      2. drop shingles with doc-frequency > df_cap  (hot-key guard — one
-         groupBy; without it stop-shingles create O(n²) pairs)
+      2. drop shingles with doc-frequency > df_cap  (hot-key guard — a
+         count window over the shingle exchange the self-join needs
+         anyway; without it stop-shingles create O(n²) pairs)
       3. self-join on shingle → count common shingles per pair (shuffle on
          shingle, then shuffle on pair; both equi, AQE handles skew)
       4. jaccard = common / (|A| + |B| - common), filter >= threshold

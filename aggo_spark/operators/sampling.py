@@ -12,6 +12,8 @@ key (hash-partitioned, AQE-skew-safe). No driver-side state, no collect.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -483,6 +485,29 @@ def hashed_ngram_features(
     )
 
 
+def _log_ratio_weights(
+    num: dict[int, int],
+    den: dict[int, int],
+    alpha: float,
+    n_buckets: int,
+    buckets,
+) -> list[tuple[int, float]]:
+    """``(b, log p̂_num[b] − log p̂_den[b])`` for each ``b`` in ``buckets``,
+    in that order, with add-``alpha`` smoothed estimates over ``n_buckets``
+    from integer bucket histograms. The one copy of the driver math behind
+    DSIR importance weights (target over corpus) and Naive Bayes log-odds
+    (positive over negative class): integer inputs in, the same doubles
+    out, whichever caller built the histograms."""
+    num_den = sum(num.values()) + alpha * n_buckets
+    den_den = sum(den.values()) + alpha * n_buckets
+    return [
+        (b,
+         math.log((num.get(b, 0) + alpha) / num_den)
+         - math.log((den.get(b, 0) + alpha) / den_den))
+        for b in buckets
+    ]
+
+
 def dsir_weights(
     corpus: DataFrame,
     target: DataFrame,
@@ -513,11 +538,15 @@ def dsir_weights(
     join — the only corpus-sized exchange is the per-doc (id)
     aggregate. The histogram collect is the bounded driver-metadata
     class (the PQ-codebook pattern): ``n_buckets`` is capped at 2^20
-    and defaults to the DSIR paper's 10k. The corpus featurizes twice
-    (histogram pass + scoring pass) — two narrow explodes beat
-    persisting a tokens-sized intermediate."""
-    import math
+    and defaults to the DSIR paper's 10k.
 
+    Jobs: building fires one histogram collect for each side whose
+    histogram is not memoized yet (at most two; corpus and target each
+    featurize once for it), and execution featurizes the corpus once more
+    for scoring — two narrow explodes beat persisting a tokens-sized
+    intermediate. When the target is a labelled slice of the corpus and a
+    classifier trains on the same labels (q71), one ``(bucket, class)``
+    histogram serves both: see ``classify._class_histograms``."""
     from ..functions.scalar_memo import plan_scalar
 
     if alpha <= 0:
@@ -545,15 +574,10 @@ def dsir_weights(
             cache_if=lambda h: bool(h))
 
     ch, th = hist(corpus), hist(target)
-    c_tot, t_tot = sum(ch.values()), sum(th.values())
-
-    def logp(h: dict, tot: int, b: int) -> float:
-        return math.log((h.get(b, 0) + alpha) / (tot + alpha * n_buckets))
-
     # buckets absent from the corpus never occur in a corpus doc's
     # features, so the weight table only needs corpus buckets; target-
-    # only mass still shapes every weight through t_tot's denominator
-    w_rows = [(b, logp(th, t_tot, b) - logp(ch, c_tot, b)) for b in ch]
+    # only mass still shapes every weight through the target total
+    w_rows = _log_ratio_weights(th, ch, alpha, n_buckets, ch)
     spark = corpus.sparkSession
     w = spark.createDataFrame(w_rows, "bucket long, __dw double")
     scored = (

@@ -8,6 +8,8 @@ natively; these helpers just pin the MongoDB-ish defaults.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator, Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -210,13 +212,49 @@ def read_parquet_stream(
     return _restore_nanos(stream, path)
 
 
+class _Tables(Mapping[str, DataFrame]):
+    """Table name → DataFrame, each opened by ``open_table`` on first
+    access and kept. Names, order, ``len``, iteration and ``in`` come
+    from the name list alone, so none of them reads a file."""
+
+    def __init__(self, open_table: Callable[[str], DataFrame], names: Iterable[str]):
+        self._open = open_table
+        self._names = list(dict.fromkeys(names))
+        self._opened: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._opened:
+            if name not in self._names:
+                raise KeyError(name)
+            self._opened[name] = self._open(name)
+        return self._opened[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._names
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._names)
+
+    def __len__(self) -> int:
+        return len(self._names)
+
+
 def load_tables(
     spark: SparkSession,
     sf_dir: str,
     names: list[str] | None = None,
     cache: bool | None = None,
-) -> dict[str, DataFrame]:
-    """Load the driver's TPC-H-ish parquet tables from ``sf_dir``.
+) -> Mapping[str, DataFrame]:
+    """The driver's TPC-H-ish parquet tables in ``sf_dir``, by name.
+
+    Tables open on first access, not here: ``spark.read.parquet`` runs a
+    schema job per table, and a query that reads one table should not pay
+    for ten. The returned mapping keeps each opened DataFrame, so later
+    lookups return the same plan. A missing or unreadable table file
+    therefore raises its ``AnalysisException`` on first access of that
+    name, not from this call. The session settings the tables need
+    (``_enable_nanos``: nanos-as-long, UTC time zone) are applied here, at
+    call time.
 
     ``cache`` (or env ``AGGO_SPARK_CACHE_TABLES=1``) repartitions each table
     by file size and pins it MEMORY_ONLY. This matches the reference's
@@ -235,9 +273,8 @@ def load_tables(
     ]
     if cache is None:
         cache = os.environ.get("AGGO_SPARK_CACHE_TABLES") == "1"
-    out: dict[str, DataFrame] = {}
-    par = spark.sparkContext.defaultParallelism
-    for n in names:
+
+    def open_table(n: str) -> DataFrame:
         path = f"{sf_dir}/{n}.parquet"
         df = _restore_nanos(spark.read.parquet(path), path)
         if cache:
@@ -247,10 +284,12 @@ def load_tables(
             # downstream per-row work (regex, shingling) runs at that width —
             # so anything non-tiny gets full core count; only dimension
             # tables stay single-partition.
+            par = spark.sparkContext.defaultParallelism
             nparts = par if os.path.getsize(path) > (256 << 10) else 1
             df = df.repartition(nparts).persist(StorageLevel.MEMORY_ONLY)
-        out[n] = df
-    return out
+        return df
+
+    return _Tables(open_table, names)
 
 
 def save_bucketed(

@@ -135,21 +135,19 @@ BUDGETS = {
     "q64_graph_lookup": 4,
     "q66_skew_salted": 2,      # salt + merge: exactly the two designed stages
     "q70_decontaminate": 6,
-    "q71_token_budget": 15,    # +5 r8: DSIR branch — feature explode ->
-                               # (id,bucket) agg, broadcast weight-table
-                               # scoring join, per-doc (id) agg, and the
-                               # doc_id join back (weight table itself
-                               # is driver-built from the collected
-                               # <=n_buckets histogram: no dist shuffles);
-                               # +1: the pre-explode parallelism guard
-                               # fires on the driver's single-split
-                               # parquet (measured 1.9x at sf1; no-op on
-                               # well-partitioned production inputs);
-                               # +5 r9: NB-classifier branch — the same
-                               # DSIR scoring shape again (guard + (id,
-                               # bucket) agg + per-doc agg + ids join +
-                               # result join; training histograms are
-                               # driver-built like the DSIR weight table)
+    "q71_token_budget": 10,    # selection: source window, lang window
+                               # (+ its broadcast), doc_id join, final
+                               # sort; DSIR + NB scored together over ONE
+                               # md5 feature plan: pre-explode
+                               # parallelism guard (the driver's
+                               # single-split parquet), (id, bucket) agg,
+                               # broadcast two-column weight table,
+                               # per-doc (id) agg with both sums, doc_id
+                               # join back (weights are driver-built
+                               # from one collected <=2*n_buckets
+                               # (bucket, class) histogram); tightened
+                               # 15 -> 10 when the separate NB scoring
+                               # branch was folded into the DSIR one
     "q75_tfidf": 7,            # tightened 11 -> 7 (r6): df(t) became a
                                # window count RIDING the tf rows instead of
                                # a second aggregate joined back, which

@@ -5,11 +5,16 @@ sf0.01), runs the matching oracle SQL in DuckDB over the same parquet files,
 and compares row count, column names, and values (columns sorted by name,
 rows sorted by all columns — mirroring the driver's value-hash compare).
 
-Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
+
+The session runs local[$SPARK_GRAFT_CPUS] (default: the cores this process
+may run on, as ``nproc`` counts them) with that many shuffle partitions
+and a 1 GB-per-core heap of at least 4 GB.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -28,11 +33,13 @@ def build_spark():
     needs must be set at runtime by load_tables/_enable_nanos."""
     from pyspark.sql import SparkSession
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     return (
-        SparkSession.builder.master("local[8]")
-        .appName("check_oracle")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("check_correctness")
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.driver.memory", f"{max(4, cpus)}g")
         .getOrCreate()
     )
 
