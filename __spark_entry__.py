@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aggo_spark import Engine, load_tables
+from aggo_spark.session import local_frame
 from aggo_spark.operators import dedup, multimodal, search, similarity, text
 
 # ---------------------------------------------------------------------------
@@ -1841,8 +1842,8 @@ def q71_token_budget(spark, sf_dir):
     nb_w, nb_b = classify._nb_model(pos, neg, n_docs, 1.0, 1024)
     dsir_w = dict(sampling._log_ratio_weights(pos, corpus, 1.0, 1024,
                                               corpus))
-    w = spark.createDataFrame([(b, dsir_w[b], nw) for b, nw in nb_w],
-                              "bucket long, dw double, nw double")
+    w = local_frame(spark, [(b, dsir_w[b], nw) for b, nw in nb_w],
+                    "bucket long, dw double, nw double")
     scored = (
         feats.join(F.broadcast(w), "bucket")
         .groupBy("id")
@@ -4872,12 +4873,17 @@ def oracle_sql() -> dict[str, str]:
             WHERE o_orderkey <= 2000
             GROUP BY 1, 2 ORDER BY 1, 2
         """,
+        # the q31 pair set in its unnest form, then min-id components
         "q58_dedup_clusters": f"""
-            WITH RECURSIVE base AS (
-              SELECT doc_id AS id, list_distinct({_SHINGLES5.format(n=norm_doc)}) AS sh
-              FROM documents),
-            exploded AS (
-              SELECT id, len(sh) AS n_sh, unnest(sh) AS s FROM base),
+            WITH RECURSIVE d AS (
+              SELECT doc_id AS id, {norm_doc} AS n FROM documents),
+            ex AS (
+              SELECT DISTINCT id, substr(n, i, 5) AS s
+              FROM (SELECT id, n,
+                           unnest(range(1, greatest(len(n) - 4, 0) + 1)) AS i
+                    FROM d)),
+            nsh AS (SELECT id, count(*) AS n_sh FROM ex GROUP BY id),
+            exploded AS (SELECT id, n_sh, s FROM ex JOIN nsh USING (id)),
             rare AS (
               SELECT s FROM exploded GROUP BY s HAVING count(*) <= 100),
             filtered AS (

@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .sampling import _hashed_gram_rows, _log_ratio_weights, hashed_ngram_features
 
 __all__ = [
@@ -153,8 +154,7 @@ def train_nb(
     pos, neg, docs = _class_histograms(
         grams.withColumn("c", F.lit(1).cast("long")), lab)
     w_rows, bias = _nb_model(pos, neg, docs, alpha, n_buckets)
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(w_rows, "bucket long, weight double")
+    wdf = local_frame(df.sparkSession, w_rows, "bucket long, weight double")
     if return_unseen:
         # exact smoothed NB's weight for any bucket with zero counts in
         # BOTH classes: log(alpha/denom_p) - log(alpha/denom_n)
@@ -245,8 +245,8 @@ def train_lr(
 
     try:
         for _ in range(iters):
-            wdf = F.broadcast(spark.createDataFrame(
-                list(w.items()), "bucket long, weight double"))
+            wdf = F.broadcast(local_frame(
+                spark, list(w.items()), "bucket long, weight double"))
             resid = (
                 feats.join(wdf, "bucket", "left")
                 .groupBy("id", "__y")
@@ -273,7 +273,7 @@ def train_lr(
         feats.unpersist()
     bias = w.pop(-2)
     w_rows = sorted(w.items())
-    return (spark.createDataFrame(w_rows, "bucket long, weight double"),
+    return (local_frame(spark, w_rows, "bucket long, weight double"),
             float(bias))
 
 

@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "hash_order",
     "stratified_sample",
@@ -578,8 +580,7 @@ def dsir_weights(
     # features, so the weight table only needs corpus buckets; target-
     # only mass still shapes every weight through the target total
     w_rows = _log_ratio_weights(th, ch, alpha, n_buckets, ch)
-    spark = corpus.sparkSession
-    w = spark.createDataFrame(w_rows, "bucket long, __dw double")
+    w = local_frame(corpus.sparkSession, w_rows, "bucket long, __dw double")
     scored = (
         cf.join(F.broadcast(w), "bucket")
         .groupBy("id")

@@ -88,3 +88,32 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over driver-held ``rows`` (tuples in ``schema`` field
+    order; ``schema`` a StructType or DDL string) as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` gives a ``LogicalRDD``, and
+    every execution of it runs a Python-worker stage (one task per core)
+    just to hand the rows back. Built through an Arrow table, the rows sit
+    in the plan itself: a broadcast or scan of them launches no task.
+    Schemas with timestamps keep the row path, because Arrow localizes
+    naive datetimes in the session time zone and the row path in the
+    process's, so the two could disagree.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    if any("timestamp" in f.dataType.simpleString() for f in schema.fields):
+        return spark.createDataFrame(rows, schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

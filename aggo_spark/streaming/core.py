@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import InvalidPipeline
+from ..session import local_frame
 
 __all__ = [
     "StreamingCollection",
@@ -67,22 +68,31 @@ def materialize_stream(out: DataFrame, mode: str = "complete") -> DataFrame:
     This is the batch-verification harness for streaming pipelines: the same
     translated plan that would run 24/7 against Kafka is executed over a
     bounded snapshot, so a DuckDB oracle can hash-check it.
+
+    The checkpoint lives only as long as the run: the memory sink holds
+    the result, so the directory is deleted once the query has terminated.
     """
+    import shutil
+
     name = "aggo_stream_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="aggo_ckpt_")
-    q = (
-        out.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            out.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return out.sparkSession.table(name)
 
 _SIGN = "__sign"
 _SEQ = "__seq"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 # accumulators with an inverse (reference keeps these incremental in
 # crossfilter-ivm.ts:129-166; the rest force multiset/odered state = recompute)
@@ -567,6 +577,28 @@ class StreamingCollection:
           becomes a Delta/Iceberg table MERGE with OPTIMIZE — same plan
           shapes, transactional swap instead of a directory rename.
           Returns the snapshot DataFrame.
+
+        An incremental pipeline's streaming aggregation keeps **one**
+        state partition, whatever ``spark.sql.shuffle.partitions`` says.
+        Each micro-batch is one spool file the driver wrote, so it is
+        driver-sized: more partitions add per-batch state-store tasks and
+        state files, not parallelism, and one partition keeps results
+        independent of the core count. The count is fixed at the query's
+        first start (the checkpoint records it); the session's own
+        setting is unchanged when ``stream()`` returns.
+
+        Every write flushes in this order: spool the delta; run the
+        non-incremental (keyed/full) recomputes, which read only the
+        spool, while the stream threads already process the new file;
+        wait for every live query; compact. So recompute callbacks
+        (``on_update`` / 'result-updated') run on the flushing thread at
+        the same time as the incremental views' callbacks run on their
+        stream threads.
+
+        Idle cost: each live query's stream thread lists the spool
+        directory every 10 ms while no data arrives — two live views
+        measured 0.44-0.61 CPU-s per wall second on a 4-core host — until
+        :meth:`stop`.
         """
         if sink not in ("list", "parquet"):
             raise ValueError(f"sink must be 'list' or 'parquet', got {sink!r}")
@@ -664,20 +696,41 @@ class StreamingCollection:
 
     def _attach_query(self, reg: _Registered, out: DataFrame, sink) -> None:
         ckpt = os.path.join(self.workdir, f"ckpt-{reg.id}")
-        q = (
+        writer = (
             out.writeStream.outputMode("update")
             .foreachBatch(sink)
             .option("checkpointLocation", ckpt)
-            .start()
         )
+        # ONE state partition per live aggregation: every micro-batch is a
+        # driver-written spool file, so more partitions only multiply the
+        # per-batch state-store tasks and delta/crc files, and the result
+        # would depend on core count. The query clones the session conf at
+        # start() and its checkpoint pins the count from the first batch
+        # on, so the caller's conf is restored right after start()
+        conf = self.spark.conf
+        with self._flush_lock:
+            prev = conf.get(_SHUFFLE_PARTITIONS, None)
+            conf.set(_SHUFFLE_PARTITIONS, "1")
+            try:
+                q = writer.start()
+            finally:
+                if prev is None:
+                    conf.unset(_SHUFFLE_PARTITIONS)
+                else:
+                    conf.set(_SHUFFLE_PARTITIONS, prev)
         self._queries[reg.id] = q
 
     def flush(self) -> None:
         """Advance every live query over all pending deltas (deterministic
         read-your-writes, like the reference's synchronous update loop).
-        In adaptive mode this first drains the pending mutation buffer
-        (one spool file for the whole batch) and feeds the measured
-        flush time back to the batch-size policy."""
+
+        Order: drain the pending buffer to the spool; run the
+        non-incremental (keyed/full) recomputes, which read only spool
+        files, while the stream threads already process the new file;
+        then wait for every live query (``processAllAvailable``); last,
+        compact results and indexes, which read the sinks' appends. In
+        adaptive mode the drain plus the wait is fed back to the
+        batch-size policy as the flush time."""
         with self._flush_lock:
             if self._deadline_timer is not None:
                 self._deadline_timer.cancel()
@@ -688,19 +741,22 @@ class StreamingCollection:
             self._in_flush = True
             try:
                 self._drain_pending()
-                for q in self._queries.values():
-                    q.processAllAvailable()
-                # the policy models the PER-TRIGGER cost it can amortize
-                # by coalescing (spool write + micro-batch drain). Stop
-                # the clock HERE: full/keyed recomputes and result/index
-                # compaction below are batch-size-independent maintenance
-                # — timing them too made every flush of a heavy registered
-                # pipeline exceed latency_budget_sec, pinning batch_size
-                # at min_batch and defeating the coalescing (ADVICE r7).
                 trigger_elapsed = time.monotonic() - t0
                 for reg in self._registered.values():
                     if not reg.incremental:
                         self._recompute(reg)
+                t1 = time.monotonic()
+                for q in self._queries.values():
+                    q.processAllAvailable()
+                # the policy models the PER-TRIGGER cost it can amortize
+                # by coalescing (spool write + micro-batch drain), so it
+                # is fed the drain plus this wait only: full/keyed
+                # recomputes and result/index compaction are
+                # batch-size-independent maintenance — timing them too
+                # made every flush of a heavy registered pipeline exceed
+                # latency_budget_sec, pinning batch_size at min_batch and
+                # defeating the coalescing (ADVICE r7).
+                trigger_elapsed += time.monotonic() - t1
                 for reg in self._registered.values():
                     if (reg.sink == "parquet"
                             and reg.sink_batches >= reg.compact_every):
@@ -1308,8 +1364,8 @@ class StreamingCollection:
             from pyspark.sql.types import StructField, StructType
 
             lsch = lstate["schema"]
-            remap_df = self.spark.createDataFrame(
-                list(remap.items()),
+            remap_df = local_frame(
+                self.spark, list(remap.items()),
                 StructType([StructField("label", lsch["label"].dataType),
                             StructField("__new", lsch["label"].dataType)]))
         if remap_df is not None:
@@ -1673,8 +1729,9 @@ class StreamingCollection:
         user_cols = [f.name for f in reg.result_schema.fields]
         key_type = next(
             f.dataType for f in reg.result_schema.fields if f.name == "_id")
-        keys_df = self.spark.createDataFrame(
-            [(v,) for v in dirty], StructType([StructField("_id", key_type)]))
+        keys_df = local_frame(
+            self.spark, [(v,) for v in dirty],
+            StructType([StructField("_id", key_type)]))
         gone = keys_df.join(
             out.select(F.col("_id").alias("__out_id")),
             F.col("_id").eqNullSafe(F.col("__out_id")), "left_anti")

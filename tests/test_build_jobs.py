@@ -135,3 +135,27 @@ def test_load_tables_sets_utc_before_any_access(spark, tmp_path):
         assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_local_frame_matches_row_path_and_launches_no_job(spark):
+    import datetime
+
+    from aggo_spark.session import local_frame
+
+    schema = "bucket long, w double, s string, ok boolean, d date"
+    rows = [(1, 0.5, "a", True, datetime.date(2020, 1, 2)),
+            (None, None, None, None, None),
+            (-3, float("nan"), "é", False, datetime.date(1970, 1, 1))]
+    n, df = _jobs(spark, lambda: local_frame(spark, rows, schema))
+    assert n == 0
+    assert "LocalRelation" in df._jdf.queryExecution().logical().toString()
+    ref = spark.createDataFrame(rows, schema)
+    assert df.schema == ref.schema
+    n, got = _jobs(spark, df.collect)
+    assert n == 0  # the rows are in the plan: no Python-worker stage
+    assert repr(got) == repr(ref.collect())  # repr: nan != nan
+    assert local_frame(spark, [], schema).collect() == []
+    # timestamps keep the row path (no Arrow localization question)
+    ts = [(datetime.datetime(2021, 3, 4, 5, 6, 7),), (None,)]
+    assert (local_frame(spark, ts, "t timestamp").collect()
+            == spark.createDataFrame(ts, "t timestamp").collect())

@@ -622,6 +622,86 @@ class TestDedupWindow:
                 {"$dedupWindow": {"keys": ["$user"], "on": "$ts"}}])
 
 
+class TestLiveViewStatePartitions:
+    """A live aggregation keeps ONE state partition whatever the session's
+    shuffle width, and flush() overlaps the keyed recompute with the
+    stream threads' micro-batches without changing any result."""
+
+    KEYED = [{"$group": {"_id": "$category", "hi": {"$max": "$price"},
+                         "n": {"$sum": 1}}}]
+
+    @staticmethod
+    def _state_partitions(workdir, rid):
+        # state/<operator id>/<partition id>/ under the query checkpoint
+        op_dir = os.path.join(workdir, f"ckpt-{rid}", "state", "0")
+        return sorted(p for p in os.listdir(op_dir) if p.isdigit())
+
+    @pytest.mark.parametrize("sink", ["list", "parquet"])
+    def test_one_state_partition_and_session_conf_unchanged(
+            self, spark, tmp_path, sink):
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.get(key)
+        assert before != "1"  # else the check below proves nothing
+        c = StreamingCollection(spark, DOC_SCHEMA, workdir=str(tmp_path))
+        try:
+            c.stream(GROUP_PIPELINE, "g", sink=sink)
+            assert spark.conf.get(key) == before
+            c.add_bulk([{"category": k, "price": 1.0, "qty": 1}
+                        for k in "abcdefgh"])
+            assert self._state_partitions(str(tmp_path), "g") == ["0"]
+            assert len(by_id(c.result("g"))) == 8
+        finally:
+            c.stop()
+        assert spark.conf.get(key) == before
+
+    def test_incremental_and_keyed_views_match_batch(self, spark, tmp_path):
+        c = StreamingCollection(spark, DOC_SCHEMA, workdir=str(tmp_path))
+        try:
+            c.stream(GROUP_PIPELINE, "inc")
+            c.stream(self.KEYED, "keyed")
+            assert c._registered["inc"].incremental
+            assert not c._registered["keyed"].incremental
+            docs = [{"category": k, "price": float(p), "qty": q}
+                    for k, p, q in [("a", 3, 1), ("b", 7, 2), ("a", 9, 1),
+                                    ("c", 2, 5), ("b", 4, 4)]]
+            c.add(docs[0])
+            c.add_bulk(docs[1:])
+            c.remove(docs[2])  # the max of group 'a'
+            c.remove(docs[3])  # group 'c' disappears
+            assert c._registered["keyed"].last_recompute_mode == "keyed"
+            live = c._live_rows_df()
+            for rid, pipe in (("inc", GROUP_PIPELINE), ("keyed", self.KEYED)):
+                expected = by_id([r.asDict() for r in
+                                  Engine().aggregate(live, pipe).collect()])
+                got = by_id(c.result(rid))
+                assert set(got) == set(expected) == {"a", "b"}
+                for k, row in expected.items():
+                    for f, v in row.items():
+                        assert got[k][f] == pytest.approx(v), (rid, k, f)
+        finally:
+            c.stop()
+
+
+def test_materialize_stream_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
+    import json as _json
+    import tempfile
+
+    from aggo_spark.streaming.core import materialize_stream
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        "\n".join(_json.dumps({"k": i % 2}) for i in range(6)) + "\n")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    for _ in range(3):
+        sdf = spark.readStream.schema("k long").json(str(src))
+        out = materialize_stream(sdf.groupBy("k").count(), "complete")
+        assert {r["k"]: r["count"] for r in out.collect()} == {0: 3, 1: 3}
+    assert [p for p in os.listdir(scratch) if p.startswith("aggo_ckpt_")] == []
+
+
 class TestParquetResultSink:
     """judge r6 #1: sink="parquet" keeps registered results in a parquet
     changelog table — rows never pass through the driver; the snapshot
