@@ -624,11 +624,9 @@ class TestDedupWindow:
 
 class TestLiveViewStatePartitions:
     """A live aggregation keeps ONE state partition whatever the session's
-    shuffle width, and flush() overlaps the keyed recompute with the
-    stream threads' micro-batches without changing any result."""
-
-    KEYED = [{"$group": {"_id": "$category", "hi": {"$max": "$price"},
-                         "n": {"$sum": 1}}}]
+    shuffle width (below the row bound), and leaves the session's own
+    width as it found it. Results under the overlapped flush order are
+    held by TestRetractionFuzz.test_random_sequences_match_model."""
 
     @staticmethod
     def _state_partitions(workdir, rid):
@@ -654,32 +652,68 @@ class TestLiveViewStatePartitions:
             c.stop()
         assert spark.conf.get(key) == before
 
-    def test_incremental_and_keyed_views_match_batch(self, spark, tmp_path):
+
+    def test_view_over_large_collection_keeps_session_width(
+            self, spark, tmp_path, monkeypatch):
+        """Started over a collection at or above the row bound (an upper
+        bound on its groups), a view keeps the session's state
+        partitions, so the per-batch state copy is spread over cores."""
+        from aggo_spark.streaming import core
+
+        monkeypatch.setattr(core, "_ONE_PARTITION_MAX_ROWS", 8)
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert width > 1
         c = StreamingCollection(spark, DOC_SCHEMA, workdir=str(tmp_path))
         try:
-            c.stream(GROUP_PIPELINE, "inc")
-            c.stream(self.KEYED, "keyed")
-            assert c._registered["inc"].incremental
-            assert not c._registered["keyed"].incremental
-            docs = [{"category": k, "price": float(p), "qty": q}
-                    for k, p, q in [("a", 3, 1), ("b", 7, 2), ("a", 9, 1),
-                                    ("c", 2, 5), ("b", 4, 4)]]
-            c.add(docs[0])
-            c.add_bulk(docs[1:])
-            c.remove(docs[2])  # the max of group 'a'
-            c.remove(docs[3])  # group 'c' disappears
-            assert c._registered["keyed"].last_recompute_mode == "keyed"
-            live = c._live_rows_df()
-            for rid, pipe in (("inc", GROUP_PIPELINE), ("keyed", self.KEYED)):
-                expected = by_id([r.asDict() for r in
-                                  Engine().aggregate(live, pipe).collect()])
-                got = by_id(c.result(rid))
-                assert set(got) == set(expected) == {"a", "b"}
-                for k, row in expected.items():
-                    for f, v in row.items():
-                        assert got[k][f] == pytest.approx(v), (rid, k, f)
+            c.add_bulk([{"category": k, "price": 1.0, "qty": 1}
+                        for k in "abcdefgh"])
+            c.stream(GROUP_PIPELINE, "g")
+            assert len(self._state_partitions(str(tmp_path), "g")) == width
+            assert len(by_id(c.result("g"))) == 8
+            assert int(spark.conf.get("spark.sql.shuffle.partitions")) == width
         finally:
             c.stop()
+
+
+def test_spool_file_appears_whole(spark, tmp_path, monkeypatch):
+    """A stream thread polls the spool every 10 ms; a delta file it
+    lists while half-written is read as a prefix and marked seen, and
+    the rest of the delta never reaches the view. The writer pauses
+    mid-file here, so a spool file visible before it is complete is
+    caught every time."""
+    import json as _json
+    import threading
+    import time
+
+    from aggo_spark.streaming import core
+
+    c = StreamingCollection(spark, DOC_SCHEMA, workdir=str(tmp_path))
+    try:
+        c.stream(GROUP_PIPELINE, "g")
+        calls = {"n": 0}
+        writer = threading.get_ident()
+
+        class SlowJson:
+            @staticmethod
+            def dumps(obj, **kw):
+                if threading.get_ident() == writer:
+                    calls["n"] += 1
+                    if calls["n"] == 1000:
+                        time.sleep(0.5)
+                return _json.dumps(obj, **kw)
+
+        monkeypatch.setattr(core, "json", SlowJson)
+        docs = [{"category": f"k{i % 500}", "price": 1.0, "qty": 1}
+                for i in range(2000)]
+        c.add_bulk(docs)
+        monkeypatch.undo()
+        got = by_id(c.result("g"))
+        assert len(got) == 500
+        assert sum(r["n"] for r in got.values()) == 2000
+        assert not [p for p in os.listdir(c.data_dir)
+                    if not p.startswith("batch-")]
+    finally:
+        c.stop()
 
 
 def test_materialize_stream_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
@@ -700,6 +734,40 @@ def test_materialize_stream_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
         out = materialize_stream(sdf.groupBy("k").count(), "complete")
         assert {r["k"]: r["count"] for r in out.collect()} == {0: 3, 1: 3}
     assert [p for p in os.listdir(scratch) if p.startswith("aggo_ckpt_")] == []
+
+
+def test_materialize_stream_interrupted_stops_query(spark, tmp_path,
+                                                    monkeypatch):
+    """Left by an exception before the run ends, materialize_stream stops
+    its query before deleting the checkpoint under it."""
+    import tempfile
+    import time
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQuery
+
+    from aggo_spark.streaming.core import materialize_stream
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text('{"k": 1}\n')
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    def interrupted(self, timeout=None):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", interrupted)
+    # a slow first batch: the query is still running when the wait is left
+    slow = F.udf(lambda k: time.sleep(3) or k, "long")
+    sdf = spark.readStream.schema("k long").json(str(src))
+    with pytest.raises(KeyboardInterrupt):
+        materialize_stream(
+            sdf.select(slow("k").alias("k")).groupBy("k").count(), "complete")
+    assert not [q for q in spark.streams.active
+                if (q.name or "").startswith("aggo_stream_")]
+    assert os.listdir(scratch) == []
 
 
 class TestParquetResultSink:
