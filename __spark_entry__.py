@@ -1811,9 +1811,10 @@ def q71_token_budget(spark, sf_dir):
     Both models share one md5 feature plan: building it fires one
     (bucket, class) histogram collect (memoized per plan), and execution
     scores DSIR and NB together — one broadcast table with both weight
-    columns, one per-doc aggregate with two sums, one join back. Same
-    integer histograms and weight math as ``dsir_weights`` /
-    ``train_nb`` + ``classifier_score``, so the same rounded outputs."""
+    columns and the NB bias, one per-doc aggregate with two sums and the
+    bias, one join back. Same integer histograms and weight math as
+    ``dsir_weights`` / ``train_nb`` + ``classifier_score``, so the same
+    rounded outputs."""
     from aggo_spark.functions.scalar_memo import plan_scalar
     from aggo_spark.operators import classify, sampling
 
@@ -1842,15 +1843,27 @@ def q71_token_budget(spark, sf_dir):
     nb_w, nb_b = classify._nb_model(pos, neg, n_docs, 1.0, 1024)
     dsir_w = dict(sampling._log_ratio_weights(pos, corpus, 1.0, 1024,
                                               corpus))
-    w = local_frame(spark, [(b, dsir_w[b], nw) for b, nw in nb_w],
-                    "bucket long, dw double, nw double")
+    # the NB bias rides the broadcast weight table as data (bucket -1,
+    # zero weights; null on every other bucket), never as F.lit: an
+    # inlined per-dataset double would make every shard's generated code
+    # new to the codegen cache. Each document gets one zero-count bucket
+    # -1 row, so every doc — with features or without — picks the bias
+    # up in the per-doc aggregate
+    w = local_frame(spark,
+                    [(b, dsir_w[b], nw, None) for b, nw in nb_w]
+                    + [(-1, 0.0, 0.0, nb_b)],
+                    "bucket long, dw double, nw double, nb_b double")
+    bias_rows = docs.select(F.col("doc_id").alias("id"),
+                            F.lit(-1).cast("long").alias("bucket"),
+                            F.lit(0).cast("long").alias("c"))
     scored = (
-        feats.join(F.broadcast(w), "bucket")
+        feats.unionByName(bias_rows).join(F.broadcast(w), "bucket")
         .groupBy("id")
         .agg(F.sum(F.col("c") * F.col("dw")).alias("log_w"),
-             F.sum(F.col("c") * F.col("nw")).alias("nb_s"))
+             F.sum(F.col("c") * F.col("nw")).alias("nb_s"),
+             F.max("nb_b").alias("nb_b"))
     )
-    logit = F.lit(nb_b) + F.coalesce("nb_s", F.lit(0.0))
+    logit = F.col("nb_b") + F.coalesce("nb_s", F.lit(0.0))
     dsir_nb = (
         docs.select("doc_id")
         .join(scored.withColumnRenamed("id", "doc_id"), "doc_id", "left")

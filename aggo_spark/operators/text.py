@@ -660,7 +660,9 @@ def language_id_table(
             fscores = [F.col(f"__s_{l}") for l in fl]
             # zero stopword evidence: keep the honest script tag
             fpred = _lang_argmax(fscores, fl, fallback=fam)
-            routed_pred = F.when(routed_lbl == fam, fpred) \
+            # the int code, not the decoded label: comparing routed_lbl
+            # would re-evaluate the whole decode chain once per family
+            routed_pred = F.when(F.col("__cjkp") == route_code[fam], fpred) \
                 .otherwise(routed_pred)
         pred = F.coalesce(routed_pred, pred)
     return counts.select(id_col, pred.alias(out_col))
@@ -739,6 +741,8 @@ def _class_count(col: Column, ranges: str) -> Column:
     measured 2.12 s (replace) vs 0.34 s (count) interleaved min — the
     complement-class scan plus full-copy rebuild costs more than the
     per-match allocations."""
+    # a leading ^ would turn the class into its complement
+    assert not ranges.startswith("^"), ranges
     return F.regexp_count(col, F.lit(f"[{ranges}]"))
 
 

@@ -11,6 +11,9 @@ Defaults chosen for MongoDB-pipeline semantics and scale:
   core count (Spark's 200 is ~4× per-task overhead at laptop scale and AQE
   coalescing does not recover it); on a cluster master it is left to the
   caller/cluster default. Tests/bench pass an explicit value.
+- Codegen cache of ``CODEGEN_CACHE_ENTRIES`` classes and class names
+  without stage ids: a query's generated code is compiled once per
+  process, not once per dataset it runs over.
 """
 
 from __future__ import annotations
@@ -19,6 +22,10 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries: a static, JVM-wide setting, so it
+# holds only when this builder starts the session
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _local_shuffle_width(effective_master: str) -> int | None:
@@ -67,6 +74,24 @@ def build_session(
         # wide aggregations (e.g. 64-permutation MinHash = 64 min buffers)
         # must stay inside whole-stage codegen; default maxFields=100 bails
         .config("spark.sql.codegen.maxFields", "256")
+        # generated code is compiled once per process, not once per
+        # query: the second run of a registry query over a new dataset
+        # finds its classes in the codegen cache. Spark's 100-entry
+        # default evicts them first: one round of q30 + q31 + q71
+        # compiles about 100 classes, and each later run compiled 7,
+        # 26-29 and 56-57 again (0.07-0.77 s of driver compile, plus C2
+        # JIT work on every new class). One pass over all 66 registry
+        # queries compiles 946 distinct sources (tools/codegen_audit.py
+        # at sf0.001); 1000 entries still evict inside that pass (the
+        # cache evicts per segment), 2000 hold it, for 12 MB more
+        # Metaspace than 100 entries
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # class names without the stage id: the same stage gets another
+        # id in another plan, and the id alone makes otherwise identical
+        # source miss the cache (with the larger cache alone, one of
+        # four q71 runs over 1,000-doc shards compiled 6 more classes).
+        # Stack traces lose the id; the plan's *(n) markers keep it
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # runtime bloom filters on shuffle joins (Spark default, pinned
         # explicitly because operators rely on it: decontamination's
         # strategy='shuffle' path expects the optimizer to pre-prune the

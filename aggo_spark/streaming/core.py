@@ -39,10 +39,12 @@ import tempfile
 import threading
 import time
 import uuid
+from decimal import Decimal
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from ..errors import InvalidPipeline
 from ..session import local_frame
@@ -335,6 +337,19 @@ class _Registered:
         # snapshots taken between flushes; slow consumers holding a
         # snapshot across multiple compactions can raise it
         self.keep_generations = 1
+
+
+# changelog batch numbers as DECIMAL, not BIGINT: codegen inlines a
+# primitive literal into the generated source (``write(4, 6L)``), so a
+# per-write number made every write's code new to the codegen cache (2
+# compiles per write and view); a decimal literal is passed to the
+# generated class as a reference object instead, so the code is the same
+# for every batch. Precision 18 keeps the value in one long.
+_BATCH_TYPE = DecimalType(18, 0)
+
+
+def _batch_lit(batch: int) -> Column:
+    return F.lit(Decimal(int(batch))).cast(_BATCH_TYPE)
 
 
 class StreamingCollection:
@@ -691,7 +706,7 @@ class StreamingCollection:
                 (batch_df.select(
                     *user_cols,
                     (F.col("__net") > 0).cast("int").alias("__live"))
-                 .withColumn("__batch", F.lit(int(batch_id)).cast("long"))
+                 .withColumn("__batch", _batch_lit(batch_id))
                  .write.mode("append").parquet(reg.result_dir))
                 reg.sink_batches += 1
                 # one snapshot plan shared by every consumer — and none
@@ -863,7 +878,7 @@ class StreamingCollection:
                 # distributed overwrite: the full result goes executor→
                 # parquet; the changelog restarts from this snapshot
                 (out.withColumn("__live", F.lit(1).cast("int"))
-                 .withColumn("__batch", F.lit(int(n_files)).cast("long"))
+                 .withColumn("__batch", _batch_lit(n_files))
                  .write.mode("overwrite").parquet(reg.result_dir))
                 reg.sink_batches = 1
             else:
@@ -1785,16 +1800,16 @@ class StreamingCollection:
         fresh = out.select(*user_cols).withColumn(
             "__live", F.lit(1).cast("int"))
         (fresh.unionByName(tombstones)
-         .withColumn("__batch", F.lit(int(batch)).cast("long"))
+         .withColumn("__batch", _batch_lit(batch))
          .write.mode("append").parquet(reg.result_dir))
         reg.sink_batches += 1
 
     def _changelog(self, reg: _Registered) -> DataFrame:
-        from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
         log_schema = StructType(list(reg.result_schema.fields) + [
             StructField("__live", IntegerType()),
-            StructField("__batch", LongType()),
+            StructField("__batch", _BATCH_TYPE),
         ])
         return self.spark.read.schema(log_schema).parquet(reg.result_dir)
 
