@@ -1559,115 +1559,6 @@ def q59_asof_join(spark, sf_dir):
     return asof.unionByName(inter)
 
 
-def _q61_curation_fused_form(spark, sf_dir):
-    """MEASURED-NEGATIVE r14 candidate, kept unregistered as the evidence
-    mirror (equivalence pinned by tests): the quality panel FUSED into
-    the language table's explode+mask-probe aggregate — one documents
-    scan (was two), no join, no interpreted ``_stop_hits`` HOF; the
-    per-doc scalars (lengths, alpha chars, md5 fingerprint as an
-    injective long-triple) ride the aggregate as all-mutable max()
-    carries, quality arithmetic reassembled bit-identically post-agg.
-
-    Why it is NOT the shipped form: the carries must cross the explode —
-    every token row grows ~7 slots, and the partial aggregate pays 7
-    extra buffer updates per token. Interleaved A/B: sf0.1 fused WINS
-    1.71/1.88 → 1.53/1.70 s min/med (fewer jobs dominate at 10k docs),
-    but sf1 fused LOSES 10.2/10.6 → 13.6/15.8 s — the per-token carry
-    cost exceeds the whole saved scan+normalize, and it scales WITH the
-    token count. Same verdict as the r13 HOF-fusion A/B, different
-    mechanism; the two-subtree join form stays (guide §1: measure at the
-    scale that matters, keep the negative with numbers)."""
-    docs = _t(spark, sf_dir, "documents")
-    langs = list(text.LANG_STOPWORDS)
-    mask_map = text._lang_probe(langs, text.LANG_STOPWORDS)
-    # normalize ONCE per doc (materialized projection — CollapseProject
-    # keeps multi-use non-cheap aliases un-inlined, SPARK-36718): the
-    # split, the normalized length, and the md5 fingerprint all read it
-    # the md5 fingerprint rides the aggregate as THREE LONGS (an
-    # injective 15+15+2 hex-char split), not as its 32-char hex string:
-    # fp only ever partitions the dedup window, so any injective
-    # encoding yields identical groups — and the string form has no
-    # cheap seat in the aggregate. As a max() carry its immutable
-    # string buffer demotes the whole aggregate to SortAggregate
-    # (sorting every exploded token row); as a grouping key it is
-    # re-hashed per TOKEN row, which measured 25% slower at sf1 than
-    # the join form it replaces. Long carries keep the buffer fully
-    # mutable (codegen HashAggregate, plan-verified) and the key narrow.
-    fp_parts = [("__f1", 1, 15), ("__f2", 16, 15), ("__f3", 31, 2)]
-    ex = docs.select(
-        "doc_id", "source", "text",
-        text.normalize_text(F.col("text")).alias("__nrm"),
-    ).select(
-        "doc_id", "source",
-        F.length("text").alias("__nc"),
-        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).alias("__ac"),
-        F.length("__nrm").alias("__nch"),
-        *[F.conv(F.substring(F.md5("__nrm"), pos, ln), 16, 10)
-          .cast("long").alias(a) for a, pos, ln in fp_parts],
-        F.explode_outer(F.split("__nrm", " ")).alias("__t"),
-    ).select(
-        "doc_id", "source", "__nc", "__ac", "__nch",
-        "__f1", "__f2", "__f3",
-        # non-empty-token marker: normalize collapses/trims whitespace,
-        # so "" only occurs for entirely-empty text (count 0, same as
-        # size(tokens(text))); null text explodes to one null row
-        F.when(F.col("__t") != "", 1).alias("__tk"),
-        mask_map[F.col("__t")].alias("__m"),
-    )
-    counts = ex.groupBy("doc_id", "source").agg(
-        *[F.max(c).alias(c)
-          for c in ("__nc", "__ac", "__nch", "__f1", "__f2", "__f3")],
-        F.count("__tk").alias("__ntok"),
-        *[F.count(F.when(F.col("__m").bitwiseAND(F.lit(1 << i)) != 0, 1))
-          .alias(f"__s_{l}") for i, l in enumerate(langs)],
-    )
-    # quality_score reassembled from the aggregated integers — same
-    # expressions over the same values, bit-identical doubles
-    ntok = F.col("__ntok")
-    alpha_ratio = F.when(
-        F.col("__nc") > 0, F.col("__ac").cast("double") / F.col("__nc")
-    ).otherwise(F.lit(0.0))
-    stop_ratio = F.when(
-        ntok > 0, F.col("__s_en").cast("double") / ntok
-    ).otherwise(F.lit(0.0))
-    mean_len = F.when(
-        ntok > 0, (F.col("__nch") - (ntok - F.lit(1))).cast("double") / ntok
-    ).otherwise(F.lit(0.0))
-    len_ok = F.when(
-        (mean_len >= 2.0) & (mean_len <= 12.0), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    size_ok = F.when(ntok >= 10, F.lit(1.0)).otherwise(
-        ntok.cast("double") / 10.0)
-    score = (
-        F.lit(0.3) * alpha_ratio
-        + F.lit(0.3) * F.least(stop_ratio * 3.0, F.lit(1.0))
-        + F.lit(0.2) * len_ok
-        + F.lit(0.2) * size_ok
-    )
-    pred = text._lang_argmax([F.col(f"__s_{l}") for l in langs], langs)
-    kept = counts.select(
-        "doc_id", "source", "__f1", "__f2", "__f3", ntok.alias("n_tok"),
-        F.round(score, 6).alias("q"), pred.alias("pred_lang"),
-    ).filter((F.col("q") >= 0.5) & (F.col("pred_lang") == "en"))
-    # min-id representative per fingerprint via one window pass — a
-    # groupBy+semi-join would evaluate the whole scoring subtree twice.
-    # Partitioning by the fp long-triple == partitioning by the md5
-    # string (injective both ways), so the kept representatives match.
-    from pyspark.sql import Window as W
-
-    final = (
-        kept.withColumn(
-            "__rn", F.row_number().over(
-                W.partitionBy("__f1", "__f2", "__f3").orderBy("doc_id")))
-        .filter(F.col("__rn") == 1)
-    )
-    return (
-        final.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum("n_tok").cast("long").alias("total_tokens"))
-    )
-
-
 def q61_curation_pipeline(spark, sf_dir):
     """End-to-end corpus curation: quality filter → language filter →
     exact dedup (keep min-id representative) → per-source token budget.
@@ -1677,9 +1568,9 @@ def q61_curation_pipeline(spark, sf_dir):
     Shape: score on one scan, language-ID on another, join on doc_id.
     Two r13/r14 fusion candidates measured WORSE and are documented as
     negatives: row-wise ``language_id_from_tokens`` (r13: interpreted
-    HOF probe ~3×) and the panel-through-the-aggregate form
-    (:func:`_q61_curation_fused_form`, r14: per-token carry cost loses
-    25% at sf1 despite halving the scans). The components themselves
+    HOF probe ~3×) and the fused form, the quality panel carried through
+    the language table's aggregate (r14: −25% at sf1, see
+    OPTIMIZATION_r14.md). The components themselves
     (sort_array, the r14 ``_class_count``/HashAggregate language-table
     work) are where q61's gains land.
 

@@ -118,7 +118,11 @@ def ngram_jaccard_pairs(
     # groupBy(s)+join form re-shuffled the WHOLE posting stream a second
     # time just to carry one count — the largest shuffle in the plan,
     # twice. Same rows, exactly (window count == group count; inner join
-    # on the <=cap set == filter).
+    # on the <=cap set == filter). Skew caveat: every posting of one
+    # stop-shingle lands in one window partition, and so in one task
+    # that buffers (and may spill) them all BEFORE the df_count filter
+    # drops them; AQE's skew-join split does not apply to a window
+    # partition, so a shingle in millions of docs is one long task.
     filtered = base.withColumn(
         "df_count", F.count(F.lit(1)).over(Window.partitionBy("s"))
     ).filter(F.col("df_count") <= df_cap).drop("df_count")
@@ -307,7 +311,6 @@ def minhash_lsh_pairs(
     unit: str = "char",
     hash_fn: str = "xxhash64",
     charset: str = "latin",
-    slim: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH, with the
     estimated Jaccard (signature agreement rate) attached.
@@ -317,78 +320,37 @@ def minhash_lsh_pairs(
     larger than bucket_cap are dropped (degenerate content); at 100 TB this
     is the difference between a shuffle and a cartesian explosion.
 
-    ``slim`` (r14 default, guide §2.3/§8: shuffle keys, not payloads): the
-    banded exchange carries only (id, band, bh) — 3 longs per band row —
-    instead of replicating the num_perm-long signature once per band
-    (bands× the signature bytes: measured at sf1, banded exchange 306 MB →
-    16.5 MB for the same 800k band rows). Candidate pairs come out
-    id-only; the est_jaccard verify re-attaches the signatures with two
-    joins against the (id, sig) table, which is persisted (MEMORY_AND_DISK)
-    because three subtrees read it. est_jaccard is deterministic per pair,
-    so dedup-then-verify equals verify-then-dedup row-for-row. Measured
-    (clean per-session best-of-4, warm, local[32]): sf0.1 xx 1.70→0.73 s,
-    md5 2.06→0.87 s; sf1 xx 4.79→1.19 s; cold first-run equal within
-    noise. ``slim=False`` keeps the payload-carrying single-pass form
-    (better when signatures are tiny relative to join setup).
+    The banded exchange carries only (id, band, bh), 3 longs per band
+    row, not the num_perm-long signature once per band (shuffle keys, not
+    payloads: measured at sf1, banded exchange 306 MB → 16.5 MB for the
+    same 800k band rows). Candidate pairs come out id-only; the
+    est_jaccard verify re-attaches the signatures with two joins against
+    the (id, sig) table, which is persisted (MEMORY_AND_DISK) because
+    three subtrees read it. est_jaccard is deterministic per pair, so
+    dedup-then-verify equals verify-then-dedup row-for-row.
     """
     rows = num_perm // bands
     sig = minhash_signatures(df, text_col, id_col, num_perm, k, unit=unit,
                              hash_fn=hash_fn, charset=charset)
     band_keys = _band_key_structs(bands, rows, hash_fn)
-    if slim:
-        # the signature table is referenced THREE times below (banding +
-        # both join-backs); without a persist the shingle-explode + 64-min
-        # aggregate subtree runs three times (measured at sf1: 3 × 18.4 MB
-        # sig-aggregate exchanges, 2.3× the wide path's wall-clock)
-        sig = sig.persist()
-        banded = sig.select(
-            "id", F.explode(F.array(*band_keys)).alias("bk")
-        ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-        # members carry struct(id) — not the bare id — so the pair-id
-        # expressions below are the SAME shape (GetStructField → least /
-        # greatest) as the payload path's and the output schema (incl.
-        # nullability, which the driver hashes) is identical by construction
-        buckets = (
-            banded.groupBy("band", "bh")
-            .agg(F.collect_list(F.struct("id")).alias("members"))
-            .filter((F.size("members") > 1) & (F.size("members") <= bucket_cap))
-        )
-        id_pairs = buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "members",
-                        lambda x, i: F.transform(
-                            F.slice(F.col("members"), i + 2, F.size("members")),
-                            lambda y: F.struct(
-                                F.least(x["id"], y["id"]).alias("id_a"),
-                                F.greatest(x["id"], y["id"]).alias("id_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        ).select("p.id_a", "p.id_b").distinct()
-        sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("__sig_a"))
-        sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("__sig_b"))
-        return (
-            id_pairs.join(sa, "id_a").join(sb, "id_b")
-            .withColumn("est_jaccard", sig_agreement(
-                F.col("__sig_a"), F.col("__sig_b"), num_perm))
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("id_a", "id_b", "est_jaccard")
-        )
+    # the signature table is referenced THREE times below (banding + both
+    # join-backs); without a persist the shingle-explode + 64-min
+    # aggregate subtree runs three times (measured at sf1: 3 × 18.4 MB
+    # sig-aggregate exchanges)
+    sig = sig.persist()
     banded = sig.select(
-        "id", "sig", F.explode(F.array(*band_keys)).alias("bk")
-    ).select("id", "sig", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-
+        "id", F.explode(F.array(*band_keys)).alias("bk")
+    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    # members carry struct(id), not the bare id: collect_list's elements
+    # are non-null, so bare ids would make id_a/id_b non-nullable and
+    # change the output schema (the driver hashes nullability)
     buckets = (
         banded.groupBy("band", "bh")
-        .agg(F.collect_list(F.struct("id", "sig")).alias("members"))
+        .agg(F.collect_list(F.struct("id")).alias("members"))
         .filter((F.size("members") > 1) & (F.size("members") <= bucket_cap))
     )
     # pairs within a bucket: index-aware transform gives i<j combinations
-    pairs = buckets.select(
+    id_pairs = buckets.select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -398,25 +360,20 @@ def minhash_lsh_pairs(
                         lambda y: F.struct(
                             F.least(x["id"], y["id"]).alias("id_a"),
                             F.greatest(x["id"], y["id"]).alias("id_b"),
-                            (
-                                F.size(
-                                    F.filter(
-                                        F.zip_with(x["sig"], y["sig"], lambda p, q: p == q),
-                                        lambda e: e,
-                                    )
-                                ).cast("double")
-                                / F.lit(float(num_perm))
-                            ).alias("est_jaccard"),
                         ),
                     ),
                 )
             )
         ).alias("p")
-    ).select("p.id_a", "p.id_b", "p.est_jaccard")
+    ).select("p.id_a", "p.id_b").distinct()
+    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("__sig_a"))
+    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("__sig_b"))
     return (
-        pairs.filter(F.col("est_jaccard") >= threshold)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("est_jaccard").alias("est_jaccard"))
+        id_pairs.join(sa, "id_a").join(sb, "id_b")
+        .withColumn("est_jaccard", sig_agreement(
+            F.col("__sig_a"), F.col("__sig_b"), num_perm))
+        .filter(F.col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -460,6 +417,10 @@ def simhash(text: Column, hash_fn: str = "xxhash64") -> Column:
     return F.aggregate(bits, F.lit(0).cast("long"), lambda a, x: a.bitwiseOR(x))
 
 
+# bit positions per counter lane in simhash_table: two lanes fill a long
+_LANE_STRIDE = 32
+
+
 def _simhash_bits(hash_fn: str) -> int:
     if hash_fn == "md5":
         return 60
@@ -473,13 +434,12 @@ def simhash_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "xxhash64",
-    lane_bits: int | None = 32,
 ) -> DataFrame:
     """(id, sh) SimHash fingerprints — the 100 TB path.
 
     Same output as the :func:`simhash` Column (bit-for-bit), but explode
-    tokens → one base hash per token → groupBy(id) with nbits codegen'd
-    ``sum((h >> i) & 1)`` bit counters → majority-vote projection. The
+    tokens → one base hash per token → groupBy(id) with codegen'd
+    lane-packed bit counters → majority-vote projection. The
     Column form folds a nbits-wide array per token through interpreted
     higher-order functions (CodegenFallback); same story as MinHash
     (:func:`minhash_signature` vs :func:`minhash_signatures`) — measured r4
@@ -491,23 +451,19 @@ def simhash_table(
     DuckDB oracle's LEFT JOIN + coalesce path. NULL text (as opposed to
     empty) fingerprints to NULL, again like the Column form, where
     ``tokens(NULL)`` propagates; NULL rows then drop out of pair joins.
-    The map-side partial agg collapses each doc to nbits+2 longs before
+    The map-side partial agg collapses each doc to 34 longs before
     the one exchange.
 
-    ``lane_bits`` (r14, guide §1.2 per-task work): pack the per-bit
-    counters into SIMD-within-a-register lanes — ``lane_bits`` aggregates,
-    each summing ``(h >> j) & 0x...0001...0001`` so lanes at stride
-    ``lane_bits`` count several bit positions inside ONE long (no
-    inter-lane carry while every lane count stays below
-    ``2**lane_bits``, i.e. docs of up to 2**lane_bits - 1 tokens — 65535
-    at 16; the default 32 caps at 2**32 - 1 tokens — unreachable for any
-    real document — with measured-equal speed; ``None`` keeps the
-    original one-counter-per-bit form). Long addition is two's-complement
-    (wraps mod 2^64), so a top lane reaching bit 63 stays bit-exact, and
-    the ``& (2^lane_bits - 1)`` unpack masks away arithmetic-shift sign
-    copies. Per-token update work drops 64 → ``lane_bits``
-    shift/and/accumulate expressions; identical output (differential test
-    pins lane_bits ∈ {None, 16, 32} row-for-row).
+    The per-bit counters are packed into SIMD-within-a-register lanes:
+    ``_LANE_STRIDE`` (32) aggregates, each summing
+    ``(h >> j) & 0x0000000100000001`` so two lanes at stride 32 count two
+    bit positions inside ONE long. No lane carries into the next while
+    its count stays below 2**32, i.e. for docs of up to 2**32 - 1
+    tokens, unreachable for any real document. Long addition is
+    two's-complement (wraps mod 2^64), so the top lane reaching bit 63
+    stays bit-exact, and the ``& (2^32 - 1)`` unpack masks away
+    arithmetic-shift sign copies. Per-token update work is 32
+    shift/and/accumulate expressions instead of 64.
     """
     nbits = _simhash_bits(hash_fn)
     if hash_fn == "md5":
@@ -521,35 +477,21 @@ def simhash_table(
         F.col(text_col).isNull().alias("tnull"),
         F.explode_outer(tokens(F.col(text_col))).alias("tk"),
     ).select("id", "tnull", h.alias("h"))
-    if lane_bits is None:
-        aggs = [
-            F.coalesce(
-                F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))), F.lit(0)
-            ).alias(f"c{i}")
-            for i in range(nbits)
-        ]
+    mask = (1 << _LANE_STRIDE) | 1
+    aggs = [
+        F.coalesce(
+            F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(mask))),
+            F.lit(0),
+        ).alias(f"c{j}")
+        for j in range(_LANE_STRIDE)
+    ]
+    lane_mask = (1 << _LANE_STRIDE) - 1
 
-        def counter(i: int) -> Column:
-            return F.col(f"c{i}")
-    else:
-        stride = int(lane_bits)
-        n_lanes = 64 // stride
-        mask = sum(1 << (stride * lane) for lane in range(n_lanes))
-        aggs = [
-            F.coalesce(
-                F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(mask))),
-                F.lit(0),
-            ).alias(f"c{j}")
-            for j in range(stride)
-        ]
-        lane_mask = (1 << stride) - 1
-
-        def counter(i: int) -> Column:
-            j, lane = i % stride, i // stride
-            c = F.col(f"c{j}")
-            if lane:
-                c = F.shiftright(c, stride * lane)
-            return c.bitwiseAND(F.lit(lane_mask))
+    def counter(i: int) -> Column:
+        c = F.col(f"c{i % _LANE_STRIDE}")
+        if i >= _LANE_STRIDE:
+            c = F.shiftright(c, _LANE_STRIDE)
+        return c.bitwiseAND(F.lit(lane_mask))
     cnt = ex.groupBy("id").agg(
         F.count(F.col("h")).alias("n"), F.max("tnull").alias("tnull"), *aggs)
     pow2 = [1 << i if i < 63 else -(1 << 63) for i in range(nbits)]
@@ -683,7 +625,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     bucket_cap: int = 200,
     hash_fn: str = "xxhash64",
-    lane_bits: int | None = 32,
 ) -> DataFrame:
     """Pairs with SimHash hamming distance <= max_hamming.
 
@@ -694,8 +635,7 @@ def simhash_pairs(
     bit_count(xor). (r8: the chunk/bucket/verify machinery is the shared
     :func:`hamming_near_dup_pairs`; plan and output unchanged.)
     """
-    sh = simhash_table(df, text_col, id_col, hash_fn=hash_fn,
-                       lane_bits=lane_bits)
+    sh = simhash_table(df, text_col, id_col, hash_fn=hash_fn)
     # 4 chunks for the classic hamming<=3 setting (unchanged plan);
     # larger radii get the chunk count/scheme the pigeonhole bound
     # requires — the old code silently kept 4 and lost recall past

@@ -97,15 +97,8 @@ def tokens(col: Column) -> Column:
     interpreted expression knocks its siblings out of whole-stage codegen —
     the doc_metrics base projection measured 4.1 s (HOF) vs 2.1 s
     (array_remove) at sf1. Outputs are identical (differential test:
-    ``_tokens_hof``)."""
+    ``tests/test_round6_fixes.py::TestTokensCodegenForm``)."""
     return F.array_remove(F.split(normalize_text(col), " "), "")
-
-
-def _tokens_hof(col: Column) -> Column:
-    """The pre-r6 interpreted-HOF form of ``tokens`` — kept ONLY as the
-    differential mirror (codegen-over-HOF rule: keep both forms + a test
-    pinning them identical)."""
-    return F.filter(F.split(normalize_text(col), " "), lambda t: t != "")
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -730,7 +723,7 @@ def _class_count(col: Column, ranges: str) -> Column:
     matcher fires once per *complement* char — on latin text counting a
     CJK class that is every character. Counting the class directly walks
     the text once with ~zero matches and no allocation: measured 0.23 →
-    0.05 s (min) over the sf0.1 corpus (ab_r14.py class_counts; alpha
+    0.05 s (min) over the sf0.1 corpus (OPTIMIZATION_r14.md; alpha
     and whitespace counts measured too — their match densities favor the
     replace form, so they keep it). Value-identical incl. astral input:
     the ranges are BMP-only, so kept chars are 1 UTF-16 unit each —

@@ -10,6 +10,9 @@ document sample (VERDICT r01 next-step #5).
 
 from __future__ import annotations
 
+import hashlib
+import itertools
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -49,16 +52,52 @@ def _word_shingles(s: str, k: int = 3) -> list[str]:
     return [" ".join(w[i : i + k]) for i in range(max(len(w) - k + 1, 0))]
 
 
-def py_minhash(text: str, num_perm: int = 64, k: int = 5, seed: int = 42,
-               unit: str = "char"):
+def _py_base_hash(s: str, hash_fn: str) -> int:
+    # mirrors dedup._base_hash; Python % is already the non-negative pmod
+    if hash_fn == "md5":
+        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % _MAX31
+    return xxh64_signed(s) % _MAX31
+
+
+def py_minhash(text: str | None, num_perm: int = 64, k: int = 5,
+               seed: int = 42, unit: str = "char", hash_fn: str = "xxhash64"):
+    if text is None:
+        return None
     mk = _char_shingles if unit == "char" else _word_shingles
     shingles = set(mk(text, k))
     if not shingles:
         return None
-    hs = [xxh64_signed(s) % _MAX31 for s in shingles]
+    hs = [_py_base_hash(s, hash_fn) for s in shingles]
     return [
         min((a * h + b) % _MAX31 for h in hs) for a, b in _perm_params(num_perm, seed)
     ]
+
+
+def py_lsh_pairs(docs: dict, num_perm: int, bands: int, threshold: float,
+                 bucket_cap: int, **minhash_kw) -> dict:
+    """Banded MinHash LSH by definition: a bucket is every doc with the
+    same signature slice in one band; buckets of one doc or of more than
+    ``bucket_cap`` docs yield no pairs; a candidate pair's est_jaccard is
+    its signature agreement / num_perm, kept when >= threshold."""
+    sigs = {d: py_minhash(t, num_perm=num_perm, **minhash_kw)
+            for d, t in docs.items()}
+    rows = num_perm // bands
+    buckets: dict = {}
+    for d, sig in sigs.items():
+        if sig is None:
+            continue
+        for b in range(bands):
+            key = (b, tuple(sig[b * rows:(b + 1) * rows]))
+            buckets.setdefault(key, []).append(d)
+    out = {}
+    for members in buckets.values():
+        if not 1 < len(members) <= bucket_cap:
+            continue
+        for x, y in itertools.combinations(sorted(members), 2):
+            est = sum(p == q for p, q in zip(sigs[x], sigs[y])) / num_perm
+            if est >= threshold:
+                out[(x, y)] = est
+    return out
 
 
 def py_simhash(text: str) -> int:
@@ -174,7 +213,8 @@ def test_simhash_table_matches_column_form(sample, spark):
     emits the same NULL token for an empty and a NULL array, so the table
     form must track text nullness explicitly)."""
     with_empty = sample.union(
-        spark.createDataFrame([(999999, ""), (999998, None)],
+        spark.createDataFrame([(999999, ""), (999998, None),
+                               (999997, "a " * 200 + "b")],
                               "doc_id bigint, text string"))
     for mode in ("xxhash64", "md5"):
         col_form = {
@@ -192,3 +232,46 @@ def test_simhash_table_matches_column_form(sample, spark):
         allones = -1 if nbits == 64 else (1 << nbits) - 1
         assert tbl_form[999999] == allones
         assert tbl_form[999998] is None
+
+
+def test_minhash_lsh_pairs_match_python(sample, spark):
+    """minhash_lsh_pairs (id-only banding + signature join-back) against
+    the pure-Python banded LSH, pairs and est_jaccard exactly, in both
+    hash modes. The extra docs make every rule bite: near-duplicate pairs
+    share some bands; five copies of one text fill buckets past
+    bucket_cap=4, so their pairs must vanish; empty and NULL text have no
+    signature and must pair with nothing. The threshold is set to one of
+    the candidates' own estimates, so the >= boundary is hit exactly."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    extra = [
+        (900001, base),
+        (900002, base.replace("lambda", "omicron")),
+        (900003, "one two three four five six seven eight nine ten"),
+        (900004, "one two three four five six seven eight nine eleven"),
+        *[(900010 + i, "copy of the same text in five docs") for i in range(5)],
+        (900020, ""),
+        (900021, None),
+    ]
+    docs = sample.union(
+        spark.createDataFrame(extra, "doc_id bigint, text string"))
+    pdocs = {r["doc_id"]: r["text"] for r in docs.collect()}
+    shape = dict(num_perm=64, bands=16, k=3, unit="word")
+    for mode in ("xxhash64", "md5"):
+        cands = py_lsh_pairs(pdocs, threshold=0.0, bucket_cap=4,
+                             hash_fn=mode, **shape)
+        ests = sorted(set(cands.values()))
+        threshold = ests[len(ests) // 2]
+        got = {
+            (r["id_a"], r["id_b"]): r["est_jaccard"]
+            for r in dedup.minhash_lsh_pairs(
+                docs, threshold=threshold, bucket_cap=4, hash_fn=mode,
+                **shape).collect()
+        }
+        want = {p: e for p, e in cands.items() if e >= threshold}
+        assert got == want, f"minhash_lsh_pairs diverges in {mode} mode"
+        assert (900001, 900002) in cands and (900003, 900004) in cands
+        assert threshold in want.values() and len(want) < len(cands)
+        assert not any(900010 <= a < 900020 for a, _ in cands)
+        uncapped = py_lsh_pairs(pdocs, threshold=0.0, bucket_cap=200,
+                                hash_fn=mode, **shape)
+        assert (900010, 900011) in uncapped

@@ -7,11 +7,15 @@ the results must stay row-for-row identical:
   consumed only through {"$size": "$as"} and then dropped compiles to a
   COUNT (no collect_list). Pinned against the generic array-building
   path (forced by keeping the array referenced in the output).
-- simhash_table lane packing (dedup.py): lane_bits ∈ {16, 32} pack the 64
-  per-bit counters into strided lanes; output must equal the lane_bits=None
-  one-counter-per-bit form for both hash modes, including NULL/empty text.
-- minhash_lsh_pairs slim banding (dedup.py): id-only band keys + signature
-  join-back must reproduce the payload-carrying banding exactly.
+- q61 curation on adversarial documents: the shipped pipeline must match
+  its DuckDB oracle on empty, NULL, whitespace-only, all-stopword,
+  stopword-free, short and fingerprint-duplicate docs.
+- language_id_table's int route code (text.py): unrouted docs keep their
+  stopword argmax.
+
+simhash_table's lane-packed counters and minhash_lsh_pairs' id-only
+banding are pinned against pure-Python references in
+test_differential_hashing.py.
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ import io
 import pytest
 
 from aggo_spark import aggregate
-from aggo_spark.operators import dedup
 
 from .conftest import rows
 
@@ -159,93 +162,46 @@ def test_size_only_exclusion_project_kill(spark, look_orders, look_items):
     assert "c" not in opt.columns
 
 
-SIMHASH_DOCS = [
-    {"doc_id": 1, "text": "the quick brown fox jumps over the lazy dog"},
-    {"doc_id": 2, "text": "the quick brown fox jumps over the lazy cat"},
-    {"doc_id": 3, "text": ""},          # zero tokens → all-ones fingerprint
-    {"doc_id": 4, "text": None},        # NULL text → NULL fingerprint
-    {"doc_id": 5, "text": "a " * 200 + "b"},  # repeated token, longer doc
+Q61_EDGE_DOCS = [
+    (1, "s1", ""),
+    (2, "s1", None),
+    (3, "s1", "   \t\n  "),
+    (4, "s2", "the of and to in a is that it for was on are with as"),
+    (5, "s2", "zzz qqq xxx www yyy kkk jjj mmm nnn ppp rrr sss"),
+    (6, "s3", "short doc"),
+    (7, "s3", "The quick brown fox jumps over the lazy dog and it "
+              "is a fine day for the running of many good dogs."),
+    (8, "s4", "The quick brown fox jumps over the lazy dog and it "
+              "is a fine day for the running of many good dogs."),
+    (9, "s4", "der die und das ist von mit den nicht ein eine auf "
+              "sich auch als werden aus er hat dass der die und"),
 ]
 
 
-@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
-@pytest.mark.parametrize("lane_bits", [16, 32])
-def test_simhash_lane_packing_identical(spark, hash_fn, lane_bits):
-    df = spark.createDataFrame(SIMHASH_DOCS)
-    base = dedup.simhash_table(df, hash_fn=hash_fn, lane_bits=None)
-    packed = dedup.simhash_table(df, hash_fn=hash_fn, lane_bits=lane_bits)
-    assert rows(base) == rows(packed)
+def test_q61_edge_docs_match_duckdb_oracle(spark, monkeypatch):
+    """q61 on adversarial docs against its DuckDB oracle: empty text, null
+    text, whitespace-only, stopword-free, all-stopword, sub-10-token, and
+    fingerprint duplicates (exercises the window dedup and every when()
+    branch of the score)."""
+    import duckdb
 
-
-def test_minhash_slim_banding_identical(spark):
-    docs = spark.createDataFrame([
-        {"doc_id": i, "text": t} for i, t in enumerate([
-            "alpha beta gamma delta epsilon zeta eta theta",
-            "alpha beta gamma delta epsilon zeta eta iota",
-            "one two three four five six seven eight nine",
-            "one two three four five six seven eight ten",
-            "totally different content here with words",
-            "", None,
-        ])
-    ])
-    for hf in ("xxhash64", "md5"):
-        a = dedup.minhash_lsh_pairs(docs, num_perm=64, bands=16, threshold=0.1,
-                                    k=3, unit="word", hash_fn=hf)
-        b = dedup.minhash_lsh_pairs(docs, num_perm=64, bands=16, threshold=0.1,
-                                    k=3, unit="word", hash_fn=hf, slim=True)
-        assert rows(a) == rows(b)
-        assert a.schema == b.schema
-
-
-def test_q61_fused_matches_join_form(spark):
-    """r14 measured-negative mirror: the fused q61 candidate
-    (_q61_curation_fused_form) must reproduce the shipped join form
-    exactly — the pin that makes its A/B numbers apples-to-apples."""
-    import __spark_entry__ as entry
-
-    sf = "/root/testdata/sf0.001"
-    a = entry.q61_curation_pipeline(spark, sf)
-    b = entry._q61_curation_fused_form(spark, sf)
-    ra, rb = rows(a), rows(b)
-    assert ra, "fixture produced no rows - vacuous comparison"
-    assert ra == rb
-    assert a.schema == b.schema
-
-
-def test_q61_fused_matches_join_form_edge_docs(spark, monkeypatch):
-    """Same pin on adversarial docs: empty text, null text, whitespace-only,
-    stopword-free, all-stopword, sub-10-token, and fingerprint duplicates
-    (exercises the window dedup and every when() branch of the score)."""
     import __spark_entry__ as entry
 
     docs = spark.createDataFrame(
-        [
-            {"doc_id": 1, "source": "s1", "text": ""},
-            {"doc_id": 2, "source": "s1", "text": None},
-            {"doc_id": 3, "source": "s1", "text": "   \t\n  "},
-            {"doc_id": 4, "source": "s2",
-             "text": "the of and to in a is that it for was on are with as"},
-            {"doc_id": 5, "source": "s2",
-             "text": "zzz qqq xxx www yyy kkk jjj mmm nnn ppp rrr sss"},
-            {"doc_id": 6, "source": "s3", "text": "short doc"},
-            {"doc_id": 7, "source": "s3",
-             "text": "The quick brown fox jumps over the lazy dog and it "
-                     "is a fine day for the running of many good dogs."},
-            {"doc_id": 8, "source": "s4",
-             "text": "The quick brown fox jumps over the lazy dog and it "
-                     "is a fine day for the running of many good dogs."},
-            {"doc_id": 9, "source": "s4",
-             "text": "der die und das ist von mit den nicht ein eine auf "
-                     "sich auch als werden aus er hat dass der die und"},
-        ]
-    )
+        Q61_EDGE_DOCS, "doc_id bigint, source string, text string")
     monkeypatch.setattr(entry, "_t", lambda s, d, name: docs)
-    a = entry.q61_curation_pipeline(spark, "ignored")
-    b = entry._q61_curation_fused_form(spark, "ignored")
-    ra, rb = rows(a), rows(b)
-    assert ra, "fixture produced no rows - vacuous comparison"
-    assert ra == rb
-    assert a.schema == b.schema
+    got = sorted(tuple(r) for r in entry.q61_curation_pipeline(
+        spark, "ignored").select("source", "n_docs", "total_tokens").collect())
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE documents "
+                    "(doc_id BIGINT, source VARCHAR, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?, ?)",
+                        Q61_EDGE_DOCS)
+        want = sorted(con.execute(
+            "SELECT source, n_docs, total_tokens FROM ("
+            + entry.oracle_sql()["q61_curation_pipeline"] + ")").fetchall())
+    assert got, "fixture produced no rows - vacuous comparison"
+    assert got == want
 
 
 def test_langid_route_code_unrouted_docs_keep_stopword_argmax(spark):

@@ -12,6 +12,7 @@ from aggo_spark.errors import InvalidPipeline
 from aggo_spark.functions import scalar_memo
 from aggo_spark.operators.search import bm25_search
 from aggo_spark.operators.similarity import rank_fusion, semantic_dedup
+from aggo_spark.operators.text import normalize_text, tokens
 
 
 class TestBM25EmptyCorpusNotMemoized:
@@ -793,13 +794,17 @@ class TestBlocklistShuffleOption:
         assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
+def _tokens_hof(col):
+    """The pre-r6 interpreted-HOF form of ``tokens``: the differential
+    mirror for the codegen form the library ships."""
+    return F.filter(F.split(normalize_text(col), " "), lambda t: t != "")
+
+
 class TestTokensCodegenForm:
     """r6: tokens() moved from an interpreted HOF filter to codegen
     array_remove — differential mirror pins identical outputs."""
 
     def test_differential_vs_hof_mirror(self, spark):
-        from aggo_spark.operators.text import _tokens_hof, tokens
-
         df = spark.createDataFrame(
             [(1, "  a  b  "), (2, ""), (3, None), (4, "!!!"), (5, "x"),
              (6, "   "), (7, "A-B c_d 9"), (8, "The quick brown fox")],
@@ -811,7 +816,6 @@ class TestTokensCodegenForm:
 
     def test_differential_on_real_docs(self, spark):
         from aggo_spark import load_tables
-        from aggo_spark.operators.text import _tokens_hof, tokens
 
         docs = load_tables(
             spark, "/root/testdata/sf0.01", ["documents"])["documents"]

@@ -1,9 +1,8 @@
 """Run a named workload and dump per-stage shuffle metrics (REST API).
 
-Usage: python tools/stage_metrics.py <workload> [sf_dir]
+Usage: python tools/stage_metrics.py <workload>
 
-Workloads:
-  q32_wide / q32_slim   — minhash LSH banding, payload vs id-only band keys
+Workloads (synthetic graph, GRAPH_N nodes, default 1M):
   pagerank_k2 / pagerank_k3 — the q89-shape pagerank at 2 vs 3 iterations
   hits_k2 / hits_k3, bfs — same idea for HITS and seed_distance
   The pagerank/hits/bfs pairs give per-iteration stage/shuffle deltas —
@@ -72,27 +71,13 @@ def _stages(spark) -> list[dict]:
 
 def main() -> None:
     workload = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _session()
-    import __spark_entry__ as entry
-    from aggo_spark.operators import dedup, graph
+    from aggo_spark.operators import graph
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
 
-    docs = entry._t(spark, sf_dir, "documents")
-    if workload in ("q32_wide", "q32_slim"):
-        spark.sparkContext.setJobDescription(workload)
-        noop(dedup.minhash_lsh_pairs(
-            docs, num_perm=64, bands=16, threshold=0.5, k=3, unit="word",
-            hash_fn="xxhash64", slim=workload.endswith("slim")))
-    elif workload in ("q61_join", "q61_fused"):
-        spark.sparkContext.setJobDescription(workload)
-        fn = (entry.q61_curation_pipeline if workload.endswith("join")
-              else entry._q61_curation_fused_form)
-        noop(fn(spark, sf_dir))
-    elif workload.startswith(("pagerank", "hits", "bfs")):
+    if workload.startswith(("pagerank", "hits", "bfs")):
         # the SCALE.md r13 fixture shape: N-node arithmetic 3-regular graph
         # plus a deliberate 10k-in-degree skew hub
         from pyspark.sql import functions as F
@@ -122,7 +107,7 @@ def main() -> None:
     tot_r = sum(r["shuffle_read_bytes"] for r in rows)
     tot_w = sum(r["shuffle_write_bytes"] for r in rows)
     print(json.dumps({
-        "workload": workload, "sf_dir": sf_dir,
+        "workload": workload,
         "n_stages": len(rows),
         "total_shuffle_read_bytes": tot_r,
         "total_shuffle_write_bytes": tot_w,
