@@ -12,10 +12,12 @@ the results must stay row-for-row identical:
   stopword-free, short and fingerprint-duplicate docs.
 - language_id_table's int route code (text.py): unrouted docs keep their
   stopword argmax.
+- simhash_table lane packing (dedup.py): two 32-bit counter lanes share
+  one long; output must equal the one-counter-per-bit Column form for
+  both hash modes, including NULL/empty text and counts past 2**16.
 
-simhash_table's lane-packed counters and minhash_lsh_pairs' id-only
-banding are pinned against pure-Python references in
-test_differential_hashing.py.
+minhash_lsh_pairs' id-only banding is pinned against a pure-Python
+banded LSH in test_differential_hashing.py.
 """
 
 from __future__ import annotations
@@ -25,7 +27,10 @@ import io
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from aggo_spark import aggregate
+from aggo_spark.operators import dedup
 
 from .conftest import rows
 
@@ -160,6 +165,36 @@ def test_size_only_exclusion_project_kill(spark, look_orders, look_items):
     got = {r["_id"]: r["n"] for r in opt.collect()}
     assert got == {1: 2, 2: 1, 3: 0, 4: 0}
     assert "c" not in opt.columns
+
+
+SIMHASH_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, ""),          # zero tokens → all-ones fingerprint
+    (4, None),        # NULL text → NULL fingerprint
+]
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+@pytest.mark.parametrize("lane_bits", [16, 32])
+def test_simhash_lane_packing_identical(spark, hash_fn, lane_bits):
+    """simhash_table packs two 32-bit counter lanes into each long; the
+    Column form keeps one counter per bit, so the two must agree. Doc 5
+    repeats one token 2**(lane_bits // 2) + 1 times: the 32 cases push
+    every counter of its bits past 2**16, where a 16-bit lane would wrap
+    and carry into its neighbour."""
+    docs = SIMHASH_DOCS + [(5, "a " * (2 ** (lane_bits // 2) + 1) + "b")]
+    df = spark.createDataFrame(docs, "doc_id bigint, text string")
+    col_form = {
+        r["doc_id"]: r["sh"]
+        for r in df.select(
+            "doc_id", dedup.simhash(F.col("text"), hash_fn=hash_fn).alias("sh")
+        ).collect()
+    }
+    packed = {r["id"]: r["sh"]
+              for r in dedup.simhash_table(df, hash_fn=hash_fn).collect()}
+    assert packed == col_form
+    assert packed[4] is None
 
 
 Q61_EDGE_DOCS = [
