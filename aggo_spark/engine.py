@@ -31,16 +31,9 @@ class Engine:
         self,
         collections: Mapping[str, DataFrame] | None = None,
         sample_seed: int = 42,
-        facet_reuse_source: bool = True,
     ) -> None:
         self.collections: ChainMap[str, DataFrame] = ChainMap({}, collections or {})
         self.sample_seed = sample_seed
-        # $facet: materialize the facet input once (lazy localCheckpoint)
-        # so N branches scan the source once, matching MongoDB's
-        # single-pass semantics (judge r6 #9). Disable when branches are
-        # highly selective over a huge source and N pushed-down scans
-        # would beat one full materialization.
-        self.facet_reuse_source = facet_reuse_source
         # Translated-plan cache keyed by (collection name, pipeline JSON) —
         # the reference keeps the same cache keyed by pipeline JSON
         # (/root/reference/src/aggo/zero-alloc-engine.ts:64-78,

@@ -1545,17 +1545,13 @@ def stage_facet(df: DataFrame, spec: dict, engine) -> DataFrame:
 
     Source reuse (judge r6 #9): Spark has no cross-branch SCAN reuse (only
     exchange/subquery reuse), so an N-branch facet would re-read the
-    source N times. With ``engine.facet_reuse_source`` (default on) the
-    facet input is lazily localCheckpoint'ed: the first action
-    materializes it ONCE to executor storage and every branch reads that
-    RDD — MongoDB's single-pass ``$facet`` semantics. Trade-off pinned in
-    the flag's docstring: for highly-selective branches over a huge
-    source, N pushed-down scans can be cheaper — construct
-    ``Engine(facet_reuse_source=False)`` for that shape.
+    source N times. So a multi-branch facet's input is lazily
+    localCheckpoint'ed: the first action materializes it ONCE to executor
+    storage and every branch reads that RDD — MongoDB's single-pass
+    ``$facet`` semantics, at the price of the branches' pushed-down scans.
     """
     src = df
-    if (len(spec) > 1 and not df.isStreaming
-            and getattr(engine, "facet_reuse_source", False)):
+    if len(spec) > 1 and not df.isStreaming:
         src = df.localCheckpoint(eager=False)
     facets = []
     for name, sub in spec.items():

@@ -326,17 +326,8 @@ class _Registered:
         # the registered result in a parquet CHANGELOG table instead of a
         # driver list — result rows never pass through the driver
         self.sink = "list"
-        self.result_dir: str | None = None
         self.result_schema = None  # user-facing StructType (batch analysis)
-        self.sink_batches = 0  # changelog appends since last compaction
-        self.compact_every = 64
-        self.result_gen = 0  # compaction generation (dir suffix)
-        self.retired_dirs: list[str] = []  # pre-compaction generations
-        # retired generations kept on disk after each compaction (r10,
-        # ADVICE): 1 = a one-generation grace period for result_df
-        # snapshots taken between flushes; slow consumers holding a
-        # snapshot across multiple compactions can raise it
-        self.keep_generations = 1
+        self.log: _Changelog | None = None  # the parquet sink's changelog
 
 
 # changelog batch numbers as DECIMAL, not BIGINT: codegen inlines a
@@ -350,6 +341,166 @@ _BATCH_TYPE = DecimalType(18, 0)
 
 def _batch_lit(batch: int) -> Column:
     return F.lit(Decimal(int(batch))).cast(_BATCH_TYPE)
+
+
+def _net_signed(log: DataFrame) -> DataFrame:
+    """Signed netting (indexes, cluster bands and labels): every column
+    but ``sign`` is the key, and a row survives with its net
+    multiplicity ``sum(sign)`` when that is positive. A band row's
+    ``sig`` is in the key because it is not functionally dependent on
+    ``(id, band, bh)``: a remove + re-add of an edited doc shares band
+    hashes for every unchanged signature slice, and only with ``sig`` in
+    the key do the old signature's rows net to 0 (r8 review)."""
+    keys = [c for c in log.columns if c != "sign"]
+    return (log.groupBy(*keys)
+            .agg(F.sum("sign").cast("long").alias("sign"))
+            .filter(F.col("sign") > 0))
+
+
+def _net_weighted(log: DataFrame) -> DataFrame:
+    """Weighted netting (n-gram count tables): the model count is
+    ``sum(sign * cnt)`` over every other column; a positive count
+    survives as one ``sign = 1`` row."""
+    keys = [c for c in log.columns if c not in ("sign", "cnt")]
+    return (log.groupBy(*keys)
+            .agg(F.sum(F.col("sign") * F.col("cnt")).cast("long").alias("cnt"))
+            .filter(F.col("cnt") > 0)
+            .withColumn("sign", F.lit(1).cast("long")))
+
+
+def _net_latest(log: DataFrame) -> DataFrame:
+    """Latest row per ``_id`` (appended view results): the highest
+    ``__batch`` wins, a live row over a tombstone of the same batch, and
+    only live winners survive."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("_id").orderBy(F.desc("__batch"), F.desc("__live"))
+    return (log.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1).drop("__rn")
+            .filter(F.col("__live") == 1))
+
+
+def _net_live(log: DataFrame) -> DataFrame:
+    """A view result only ever overwritten whole (full recompute) has no
+    superseded rows: its live rows are the result."""
+    return log.filter(F.col("__live") == 1)
+
+
+# netting rule name -> (rule, the marker columns a netted read drops)
+_RULES = {
+    "signed": (_net_signed, ("sign",)),
+    "weighted": (_net_weighted, ("sign",)),
+    "latest": (_net_latest, ("__live", "__batch")),
+    "live": (_net_live, ("__live", "__batch")),
+}
+
+
+class _Changelog:
+    """One parquet changelog of a :class:`StreamingCollection`: a
+    parquet-sink view's result, a maintained index, a cluster state's
+    bands or labels, or an n-gram count table. The rule is written once,
+    in :meth:`StreamingCollection.stream`: each micro-batch appends to
+    the current generation ``path``; reads net by the log's rule; every
+    ``compact_every`` appends ``flush()`` rewrites the netted rows to a
+    new generation ``<base>-g{N}`` and repoints; the one retired
+    generation is deleted at the next compaction or at ``stop()``."""
+
+    def __init__(self, spark: SparkSession, base: str, schema, rule: str,
+                 compact_every: int, part: str | None = None) -> None:
+        self.spark = spark
+        self.base = base
+        self.path = base  # current generation; appends and reads follow it
+        self.gen = 0
+        self.retired: list[str] = []
+        self.batches = 0  # appends since the last compaction
+        self.compact_every = int(compact_every)
+        # recorded so a read answers BEFORE the first write (index sinks
+        # skip empty batches, so the directory may not exist yet — r8)
+        self.schema = schema
+        self.rule = rule
+        self.part = part  # partition column of every generation
+
+    def _write(self, df: DataFrame, path: str, mode: str) -> None:
+        writer = df.write.mode(mode)
+        if self.part is not None:
+            writer = writer.partitionBy(self.part)
+        writer.parquet(path)
+
+    def append(self, df: DataFrame, overwrite: bool = False) -> None:
+        """Append ``df`` to the current generation; ``overwrite`` restarts
+        the log from ``df`` (a full recompute's snapshot)."""
+        self._write(df, self.path, "overwrite" if overwrite else "append")
+        self.batches = 1 if overwrite else self.batches + 1
+
+    def read(self) -> DataFrame:
+        """The raw signed rows of the current generation (an empty frame
+        with the log's schema before the first write)."""
+        if not os.path.isdir(self.path):
+            return self.spark.createDataFrame([], self.schema)
+        if self.part is None:
+            # a view result is read with its declared schema: building a
+            # snapshot then reads no parquet footer
+            return self.spark.read.schema(self.schema).parquet(self.path)
+        return self.spark.read.parquet(self.path)
+
+    def net(self, semi: DataFrame | None = None, on: list[str] | None = None,
+            where: Column | None = None) -> DataFrame:
+        """Net rows of the current generation, markers dropped.
+
+        ``semi``/``on`` (left-semi filter) and ``where`` (predicate on
+        key columns) are optional PRE-netting filters. The netting key
+        holds every non-marker column, so filtering on key columns
+        COMMUTES with netting — the cluster-maintenance hot path uses
+        this to bound every per-batch netting shuffle by the delta's
+        (band, bh) buckets / touched ids / affected labels instead of the
+        whole corpus (r10 review of maintain_clusters)."""
+        df = self.read()
+        if semi is not None:
+            df = df.join(semi.select(*on).distinct(), on, "left_semi")
+        if where is not None:
+            df = df.filter(where)
+        rule, markers = _RULES[self.rule]
+        return rule(df).drop(*markers)
+
+    def compact(self) -> None:
+        """Generation swap: write the netted rows (markers kept, so later
+        appends still net against them) to ``<base>-g{N+1}``, repoint,
+        and retire the previous generation. A DataFrame read from it
+        earlier keeps resolving its part-files — a stale snapshot, not
+        FileNotFound — until the next compaction releases it."""
+        if not os.path.isdir(self.path):
+            return
+        rows = _RULES[self.rule][0](self.read())
+        self.gen += 1
+        new_dir = f"{self.base}-g{self.gen}"
+        self._write(rows.select(*self.schema.fieldNames()), new_dir,
+                    "overwrite")
+        old, self.path = self.path, new_dir
+        self.release()
+        self.retired = [old]
+        self.batches = 1
+
+    def release(self) -> None:
+        """Delete the retired generation."""
+        import shutil
+
+        for d in self.retired:
+            shutil.rmtree(d, ignore_errors=True)
+        self.retired = []
+
+
+def _band_schema(id_type) -> "StructType":
+    """Schema of a signed MinHash band table ``(id, sign, band, bh, sig)``."""
+    from pyspark.sql.types import (ArrayType, IntegerType, LongType,
+                                   StructField, StructType)
+
+    return StructType([
+        StructField("id", id_type),
+        StructField("sign", LongType()),
+        StructField("band", IntegerType()),
+        StructField("bh", LongType()),
+        StructField("sig", ArrayType(LongType())),
+    ])
 
 
 class StreamingCollection:
@@ -434,11 +585,13 @@ class StreamingCollection:
         # thread that enforces max_delay_sec when the producer goes idle
         self._flush_lock = threading.RLock()
         self._deadline_timer: "threading.Timer | None" = None
-        # maintained posting indexes (maintain_index): compaction state,
-        # drained driver-side in flush() — never on the streaming thread
-        self._indexes: dict[str, dict] = {}
+        # every parquet changelog the collection keeps — parquet-sink view
+        # results ("result-<rid>"), indexes, cluster bands and labels,
+        # n-gram tables — compacted driver-side in flush(), never on a
+        # streaming thread
+        self._logs: dict[str, _Changelog] = {}
         # maintained near-dup cluster states (maintain_clusters):
-        # {rid: {"bands": band-index rid, "labels": labels-state rid,
+        # {rid: {"bands": band changelog, "labels": labels changelog,
         #        minhash params, threshold}}
         self._clusters: dict[str, dict] = {}
         # maintained n-gram LM states (maintain_ngram_lm):
@@ -457,24 +610,27 @@ class StreamingCollection:
         self.add_bulk([doc])
 
     def add_bulk(self, docs: list[dict]) -> None:
-        if self.autoflush == "adaptive":
-            self._buffer([(d, 1) for d in docs])
-            return
-        self._write_rows([(d, 1) for d in docs])
-        self._emit("data-added", docs)
-        self.flush()
+        self._mutate(docs, 1, "data-added")
 
     def remove(self, docs: dict | list[dict]) -> None:
         """Retract previously-added documents (reference streaming.ts:211-258).
         The caller passes the same document values that were added."""
         if isinstance(docs, dict):
             docs = [docs]
+        self._mutate(docs, -1, "data-removed")
+
+    def _mutate(self, docs: list[dict], sign: int, event: str) -> None:
         if self.autoflush == "adaptive":
-            self._buffer([(d, -1) for d in docs])
+            self._buffer([(d, sign) for d in docs])
             return
-        self._write_rows([(d, -1) for d in docs])
-        self._emit("data-removed", docs)
-        self.flush()
+        # the spool write, its event and its flush are one step under the
+        # flush lock: a stream thread must never append this write's rows
+        # to a changelog generation that another thread's flush has
+        # already read for compaction and is about to retire
+        with self._flush_lock:
+            self._write_rows([(d, sign) for d in docs])
+            self._emit(event, docs)
+            self.flush()
 
     def _buffer(self, signed_docs: list[tuple[dict, int]]) -> None:
         """Adaptive-mode enqueue: append to the pending buffer and flush
@@ -586,8 +742,7 @@ class StreamingCollection:
     # -- live pipelines ---------------------------------------------------
 
     def stream(self, pipeline: list, rid: str | None = None,
-               sink: str = "list", compact_every: int = 64,
-               keep_generations: int = 1):
+               sink: str = "list", compact_every: int = 64):
         """Register a live pipeline; keeps its result updated on every
         add/remove (reference streaming.ts:514-565).
 
@@ -608,12 +763,33 @@ class StreamingCollection:
           the signed net count); the keyed recompute path appends only the
           dirty groups' fresh rows plus tombstones; the full recompute
           path overwrites distributed. The visible result is the
-          latest-row-per-``_id`` snapshot view (``result_df``); every
-          ``compact_every`` appends the changelog is compacted to its
-          winning rows. At scale the parquet dir + manual compaction
-          becomes a Delta/Iceberg table MERGE with OPTIMIZE — same plan
-          shapes, transactional swap instead of a directory rename.
-          Returns the snapshot DataFrame.
+          latest-row-per-``_id`` snapshot view (``result_df``), compacted
+          every ``compact_every`` appends by the changelog rule below.
+          At scale the parquet dir + manual compaction becomes a
+          Delta/Iceberg table MERGE with OPTIMIZE — same plan shapes,
+          transactional swap instead of a directory rename. Returns the
+          snapshot DataFrame.
+
+        Every parquet changelog the collection keeps — a parquet-sink
+        view's result and the tables of :meth:`maintain_index`,
+        :meth:`maintain_clusters` and :meth:`maintain_ngram_lm` — follows
+        one rule:
+
+        - **append**: each micro-batch appends its rows to the current
+          generation directory; earlier rows are never rewritten.
+        - **net at read**: signed tables (indexes, cluster bands and
+          labels) group by every column but ``sign`` and keep rows whose
+          ``sum(sign)`` is positive; n-gram tables keep positive
+          ``sum(sign * cnt)``; a view result keeps the latest row per
+          ``_id`` when it is live.
+        - **compact by generation swap**: every ``compact_every``
+          appends, ``flush()`` writes the netted rows to a new directory
+          ``<path>-g{N}`` and repoints the table, so a DataFrame read
+          before stays a valid, stale snapshot instead of hitting
+          FileNotFound.
+        - **one retired generation**: the previous generation stays on
+          disk until the next compaction deletes it, the last one until
+          :meth:`stop`; a snapshot outlives one compaction, not two.
 
         An incremental pipeline's streaming aggregation keeps **one**
         state partition, whatever ``spark.sql.shuffle.partitions`` says.
@@ -642,7 +818,9 @@ class StreamingCollection:
         wait for every live query; compact. So recompute callbacks
         (``on_update`` / 'result-updated') run on the flushing thread at
         the same time as the incremental views' callbacks run on their
-        stream threads.
+        stream threads. An eager write holds the flush lock from its
+        spool write to the end of its flush, so concurrent writers take
+        turns.
 
         Idle cost: each live query's stream thread lists the spool
         directory every 10 ms while no data arrives — two live views
@@ -660,14 +838,24 @@ class StreamingCollection:
             # them — fall back to full recompute for those (advisor r6)
             reg.keyed_field = None
         if sink == "parquet":
+            from pyspark.sql.types import IntegerType, StructField, StructType
+
             reg.sink = "parquet"
-            reg.compact_every = int(compact_every)
-            reg.keep_generations = max(1, int(keep_generations))
-            reg.result_dir = os.path.join(self.workdir, f"result-{rid}")
             # analysis-only batch compile over an empty doc-shaped frame:
             # pins the user-facing result schema (no Spark job)
             empty = self.spark.createDataFrame([], self.doc_schema)
             reg.result_schema = self.engine.aggregate(empty, pipeline).schema
+            log_schema = StructType(list(reg.result_schema.fields) + [
+                StructField("__live", IntegerType()),
+                StructField("__batch", _BATCH_TYPE),
+            ])
+            # only an appended result has superseded rows to net away; a
+            # full recompute overwrites the whole log
+            appends = incremental or reg.keyed_field is not None
+            name = f"result-{rid}"
+            reg.log = self._logs[name] = _Changelog(
+                self.spark, os.path.join(self.workdir, name), log_schema,
+                "latest" if appends else "live", compact_every)
         self._registered[rid] = reg
         if incremental:
             self._start_incremental(reg)
@@ -703,25 +891,23 @@ class StreamingCollection:
             def sink(batch_df: DataFrame, batch_id: int) -> None:
                 # distributed append of this micro-batch's changed groups:
                 # the rows go executor→parquet, never through the driver
-                (batch_df.select(
+                reg.log.append(batch_df.select(
                     *user_cols,
                     (F.col("__net") > 0).cast("int").alias("__live"))
-                 .withColumn("__batch", _batch_lit(batch_id))
-                 .write.mode("append").parquet(reg.result_dir))
-                reg.sink_batches += 1
+                    .withColumn("__batch", _batch_lit(batch_id)))
                 # one snapshot plan shared by every consumer — and none
                 # built at all when nobody is listening (snapshot
                 # construction costs a parquet footer read per call).
-                # _snapshot_df, not result_df: this runs on the STREAMING
-                # thread inside processAllAvailable — the read barrier's
-                # flush lock is held by the flushing thread
+                # the log's net(), not result_df: this runs on the
+                # STREAMING thread inside processAllAvailable — the read
+                # barrier's flush lock is held by the flushing thread
                 if reg.on_update or self._listeners["result-updated"]:
-                    snap = self._snapshot_df(reg)
+                    snap = reg.log.net()
                     for cb in reg.on_update:
                         cb(snap)
                     self._emit("result-updated", reg.id, snap)
 
-            self._attach_query(reg, out, sink)
+            self._start_query(reg.id, out, sink, view=True)
             return
 
         def sink(batch_df: DataFrame, _batch_id: int) -> None:
@@ -741,15 +927,26 @@ class StreamingCollection:
                 cb(reg.result_rows)
             self._emit("result-updated", reg.id, reg.result_rows)
 
-        self._attach_query(reg, out, sink)
+        self._start_query(reg.id, out, sink, view=True)
 
-    def _attach_query(self, reg: _Registered, out: DataFrame, sink) -> None:
-        ckpt = os.path.join(self.workdir, f"ckpt-{reg.id}")
+    def _start_query(self, rid: str, sdf: DataFrame, sink,
+                     view: bool = False) -> None:
+        """Start ``rid``'s live query: ``sink`` runs on every micro-batch
+        of ``sdf`` (``foreachBatch``), checkpointed under the workdir. An
+        incremental ``view`` runs in update mode under the width rule
+        below; every other query (index, cluster, LM) appends, keeps the
+        session width — its foreachBatch plans run on the conf the query
+        cloned at start — and has drained the spool when this returns."""
         writer = (
-            out.writeStream.outputMode("update")
+            sdf.writeStream.outputMode("update" if view else "append")
             .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation",
+                    os.path.join(self.workdir, f"ckpt-{rid}"))
         )
+        if not view:
+            q = self._queries[rid] = writer.start()
+            q.processAllAvailable()
+            return
         # ONE state partition per live aggregation: every micro-batch is a
         # driver-written spool file, so more partitions only multiply the
         # per-batch state-store tasks and delta/crc files, and the result
@@ -773,7 +970,7 @@ class StreamingCollection:
                     conf.unset(_SHUFFLE_PARTITIONS)
                 elif one:
                     conf.set(_SHUFFLE_PARTITIONS, prev)
-        self._queries[reg.id] = q
+        self._queries[rid] = q
 
     def flush(self) -> None:
         """Advance every live query over all pending deltas (deterministic
@@ -812,11 +1009,9 @@ class StreamingCollection:
                 # latency_budget_sec, pinning batch_size at min_batch and
                 # defeating the coalescing (ADVICE r7).
                 trigger_elapsed += time.monotonic() - t1
-                for reg in self._registered.values():
-                    if (reg.sink == "parquet"
-                            and reg.sink_batches >= reg.compact_every):
-                        self.compact_result(reg.id)
-                self._compact_indexes()
+                for log in self._logs.values():
+                    if log.batches >= log.compact_every:
+                        log.compact()
             finally:
                 self._in_flush = False
             if self.autoflush == "adaptive" and n_pending:
@@ -877,17 +1072,17 @@ class StreamingCollection:
             if reg.sink == "parquet":
                 # distributed overwrite: the full result goes executor→
                 # parquet; the changelog restarts from this snapshot
-                (out.withColumn("__live", F.lit(1).cast("int"))
-                 .withColumn("__batch", _batch_lit(n_files))
-                 .write.mode("overwrite").parquet(reg.result_dir))
-                reg.sink_batches = 1
+                reg.log.append(
+                    out.withColumn("__live", F.lit(1).cast("int"))
+                    .withColumn("__batch", _batch_lit(n_files)),
+                    overwrite=True)
             else:
                 reg.result_rows = [r.asDict(recursive=True) for r in out.collect()]
         reg.file_pos = n_files
         if reg.on_update or self._listeners["result-updated"]:
             # _recompute runs on the flush thread (RLock owner), but use
             # the barrier-free snapshot for uniformity with the sink
-            payload = (self._snapshot_df(reg) if reg.sink == "parquet"
+            payload = (reg.log.net() if reg.sink == "parquet"
                        else reg.result_rows)
             for cb in reg.on_update:
                 cb(payload)
@@ -923,8 +1118,7 @@ class StreamingCollection:
                        shingle_k: int = 5, unit: str = "char",
                        hash_fn: str = "xxhash64",
                        vec_col: str = "embedding",
-                       centroids: list | None = None,
-                       keep_generations: int = 1) -> str:
+                       centroids: list | None = None) -> str:
         """Incrementally-maintained posting-table index over this
         collection (judge r6 #7): a Structured Streaming query explodes
         each CDC micro-batch into SIGNED posting rows — ``(id, sign,
@@ -935,19 +1129,12 @@ class StreamingCollection:
         ``sign`` column and resolve posting liveness as net multiplicity
         per (id, term), so retracted docs cancel out of results too.
 
-        Every ``compact_every`` batches the changelog is compacted to its
-        net-positive postings (the Delta OPTIMIZE analogue). Compaction
-        runs DRIVER-SIDE in ``flush()`` — not on the streaming thread —
-        and is GENERATION-SWAP based (r8, ADVICE): compacted postings
-        land in a NEW directory (``<path>-g{N}``) and the maintenance
-        state repoints, so an index DataFrame a caller built earlier
-        (``spark.read.parquet(...)`` — naturally reused across queries)
-        stays a valid, merely stale, snapshot instead of hitting
-        FileNotFound mid-query (the same hazard ``compact_result``
-        already avoided). Read the CURRENT generation via
-        :meth:`index_df` / :meth:`index_path`; a raw read of the original
-        ``path`` is frozen at generation 0 once a compaction has run.
-        Retired generations are deleted at ``stop()``. ``kind``:
+        The index is a changelog under the rule in :meth:`stream`:
+        compaction every ``compact_every`` batches (the Delta OPTIMIZE
+        analogue) swaps in a new generation ``<path>-g{N}``, so read the
+        CURRENT generation via :meth:`index_df` / :meth:`index_path`; a
+        raw read of the original ``path`` is frozen at generation 0 once
+        a compaction has run. ``kind``:
         ``"text"`` ($text tokens), ``"trigram"`` (raw char 3-grams for
         $regex), or — r8, r7-verdict #7 — ``"minhash"``: signed MinHash
         LSH BAND rows ``(id, sign, band, bh, sig)``, maintained per CDC
@@ -958,12 +1145,7 @@ class StreamingCollection:
         as net multiplicity exactly like text postings. The minhash
         parameters (``num_perm``/``bands``/``shingle_k``/``unit``/
         ``hash_fn``) are fixed at index creation — probes must use the
-        same values (they key the band hashes). ``keep_generations``
-        (r10, ADVICE) sets how many RETIRED generations stay readable
-        after each compaction (default 1): a snapshot from
-        :meth:`index_df` stays valid across that many subsequent
-        compactions; consumers holding snapshots longer should raise it.
-        ``"vector"`` (r9,
+        same values (they key the band hashes). ``"vector"`` (r9,
         verdict #6) maintains the EMBEDDING tier: one signed ``(id,
         sign, vec, cell)`` row per doc with ``cell`` = nearest centroid
         of the pinned ``centroids`` list — probe semantic near-dups of
@@ -974,11 +1156,30 @@ class StreamingCollection:
         from ..operators import search as _search
         from ..operators.text import tokens as _tokens
 
+        rid = f"idx-{kind}-{uuid.uuid4().hex[:8]}"
         if kind == "minhash":
-            return self._maintain_minhash_index(
-                path, text_col, id_col, compact_every,
-                num_perm, bands, shingle_k, unit, hash_fn,
-                keep_generations)
+            from ..operators import dedup as _dedup
+
+            log = self._logs[rid] = _Changelog(
+                self.spark, path, _band_schema(self.cdc_schema[id_col].dataType),
+                "signed", compact_every, part="band")
+            band_keys = _dedup._band_key_structs(bands, num_perm // bands,
+                                                 hash_fn)
+
+            # signatures need a groupBy over exploded shingles, so unlike
+            # the posting kinds' stream-level explode the computation runs
+            # INSIDE foreachBatch (batch semantics per micro-batch; still
+            # delta-only, the batch IS the delta). Same-id add+remove
+            # coalesced into one micro-batch stay distinct: signatures
+            # group on (id, sign)
+            def band_sink(batch_df: DataFrame, _batch_id: int) -> None:
+                if not batch_df.isEmpty():
+                    log.append(_signed_band_rows(
+                        batch_df, id_col, text_col, num_perm, shingle_k,
+                        unit, hash_fn, band_keys))
+
+            self._start_query(rid, self._cdc_stream(), band_sink)
+            return rid
         if kind == "vector":
             # embedding tier (r9, verdict #6): one signed row per doc —
             # (id, sign, vec, cell) with cell = nearest IVF centroid, a
@@ -999,8 +1200,7 @@ class StreamingCollection:
                     "not a thing)")
             from ..operators.similarity import _cell_ranked_expr
 
-            rid = f"idx-vector-{uuid.uuid4().hex[:8]}"
-            term, bucket = "vec", "cell"
+            bucket = "cell"
             postings = self._cdc_stream().select(
                 F.col(id_col).alias("id"), F.col(_SIGN).alias("sign"),
                 F.col(vec_col).alias("vec"),
@@ -1008,132 +1208,44 @@ class StreamingCollection:
                     _cell_ranked_expr(centroids, F.col(vec_col), 1),
                     1)["cell"].alias("cell"),
             )
-            return self._start_index_query(
-                rid, postings, path, kind, term, bucket, compact_every)
-        if kind == "text":
-            grams = F.array_distinct(_tokens(F.col(text_col)))
-            term, bucket = "token", "token_bucket"
-        elif kind == "trigram":
-            grams = F.array_distinct(
-                _search._raw_char_grams(F.col(text_col)))
-            term, bucket = "gram", "gram_bucket"
-        elif kind == "content":
-            # EXACT-dedup membership (r8): one signed row per doc
-            # carrying its normalized content fingerprint — the cheapest
-            # of the maintained indexes, answering "is this exact doc
-            # already in the corpus" (dedup.content_seen) per delta
-            from ..operators.text import fingerprint as _fp
-
-            grams = F.array(_fp(F.col(text_col)))
-            term, bucket = "content_hash", "content_bucket"
         else:
-            raise ValueError(
-                f"kind must be 'text', 'trigram', 'minhash', 'content' "
-                f"or 'vector', got {kind!r}")
-        rid = f"idx-{kind}-{uuid.uuid4().hex[:8]}"
-        postings = (
-            self._cdc_stream()
-            .select(F.col(id_col).alias("id"), F.col(_SIGN).alias("sign"),
-                    F.explode(grams).alias(term))
-            .withColumn(bucket, F.pmod(F.xxhash64(term),
-                                       F.lit(_search.N_BUCKETS)))
-        )
-        return self._start_index_query(
-            rid, postings, path, kind, term, bucket, compact_every,
-            keep_generations)
+            if kind == "text":
+                grams = F.array_distinct(_tokens(F.col(text_col)))
+                term, bucket = "token", "token_bucket"
+            elif kind == "trigram":
+                grams = F.array_distinct(
+                    _search._raw_char_grams(F.col(text_col)))
+                term, bucket = "gram", "gram_bucket"
+            elif kind == "content":
+                # EXACT-dedup membership (r8): one signed row per doc
+                # carrying its normalized content fingerprint — the
+                # cheapest of the maintained indexes, answering "is this
+                # exact doc already in the corpus" (dedup.content_seen)
+                # per delta
+                from ..operators.text import fingerprint as _fp
 
-    def _start_index_query(self, rid: str, postings: DataFrame, path: str,
-                           kind: str, term: str, bucket: str,
-                           compact_every: int,
-                           keep_generations: int = 1) -> str:
-        """Shared maintenance-query tail for the projection-shaped index
-        kinds (text/trigram/content/vector): register state, start the
-        foreachBatch append sink partitioned by ``bucket``."""
-        state = {"path": path, "base": path, "gen": 0, "retired": [],
-                 "kind": kind, "term": term, "bucket": bucket,
-                 "batches": 0, "compact_every": int(compact_every),
-                 "keep_generations": max(1, int(keep_generations))}
-        self._indexes[rid] = state
-        # schema recorded so index_df can answer BEFORE the first
-        # non-empty micro-batch (the sink skips empty batches, so the
-        # parquet dir may not exist yet — r8 review)
-        state["schema"] = postings.schema
-
-        def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            # follow the state attr, not the captured arg: compaction
-            # repoints the current generation directory
-            (batch_df.write.mode("append").partitionBy(bucket)
-             .parquet(state["path"]))
-            state["batches"] += 1
-
-        ckpt = os.path.join(self.workdir, f"ckpt-{rid}")
-        q = (
-            postings.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        self._queries[rid] = q
-        q.processAllAvailable()
-        return rid
-
-    def _maintain_minhash_index(self, path: str, text_col: str,
-                                id_col: str, compact_every: int,
-                                num_perm: int, bands: int, shingle_k: int,
-                                unit: str, hash_fn: str,
-                                keep_generations: int = 1) -> str:
-        """Signed MinHash band-table maintenance (see maintain_index,
-        kind="minhash"). Unlike the posting kinds — whose explode is a
-        stream-level projection — signatures need a groupBy over
-        exploded shingles, so the computation runs INSIDE foreachBatch
-        (batch semantics per micro-batch; still delta-only, the batch IS
-        the delta). Same-id add+remove coalesced into one micro-batch
-        stay distinct: signatures group on (id, sign)."""
-        from ..operators import dedup as _dedup
-
-        rid = f"idx-minhash-{uuid.uuid4().hex[:8]}"
-        id_type = next(f.dataType for f in self.cdc_schema.fields
-                       if f.name == id_col)
-        from pyspark.sql.types import (ArrayType, IntegerType, LongType,
-                                       StructField, StructType)
-
-        state = {"path": path, "base": path, "gen": 0, "retired": [],
-                 "kind": "minhash",
-                 # empty-index schema (see maintain_index note)
-                 "schema": StructType([
-                     StructField("id", id_type),
-                     StructField("sign", LongType()),
-                     StructField("band", IntegerType()),
-                     StructField("bh", LongType()),
-                     StructField("sig", ArrayType(LongType())),
-                 ]),
-                 "batches": 0, "compact_every": int(compact_every),
-                 "keep_generations": max(1, int(keep_generations))}
-        self._indexes[rid] = state
-        rows_per_band = num_perm // bands
-        band_keys = _dedup._band_key_structs(bands, rows_per_band, hash_fn)
+                grams = F.array(_fp(F.col(text_col)))
+                term, bucket = "content_hash", "content_bucket"
+            else:
+                raise ValueError(
+                    f"kind must be 'text', 'trigram', 'minhash', 'content' "
+                    f"or 'vector', got {kind!r}")
+            postings = (
+                self._cdc_stream()
+                .select(F.col(id_col).alias("id"), F.col(_SIGN).alias("sign"),
+                        F.explode(grams).alias(term))
+                .withColumn(bucket, F.pmod(F.xxhash64(term),
+                                           F.lit(_search.N_BUCKETS)))
+            )
+        log = self._logs[rid] = _Changelog(
+            self.spark, path, postings.schema, "signed", compact_every,
+            part=bucket)
 
         def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            out = _signed_band_rows(
-                batch_df, id_col, text_col, num_perm, shingle_k, unit,
-                hash_fn, band_keys)
-            out.write.mode("append").partitionBy("band") \
-               .parquet(state["path"])
-            state["batches"] += 1
+            if not batch_df.isEmpty():
+                log.append(batch_df)
 
-        ckpt = os.path.join(self.workdir, f"ckpt-{rid}")
-        q = (
-            self._cdc_stream().writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        self._queries[rid] = q
-        q.processAllAvailable()
+        self._start_query(rid, postings, sink)
         return rid
 
     def maintain_clusters(self, path: str, text_col: str = "text",
@@ -1142,8 +1254,7 @@ class StreamingCollection:
                           shingle_k: int = 5, unit: str = "char",
                           hash_fn: str = "xxhash64",
                           threshold: float = 0.5,
-                          compact_every: int = 64,
-                          keep_generations: int = 1) -> str:
+                          compact_every: int = 64) -> str:
         """Incrementally-maintained NEAR-DUP CLUSTER MEMBERSHIP (r9
         verdict #3): the cluster-state extension of
         ``maintain_index(kind="minhash")`` — a streamed corpus can ask
@@ -1151,8 +1262,8 @@ class StreamingCollection:
         join" without ever re-running batch connected components
         (``dedup.connected_components``) over the corpus.
 
-        State (both signed parquet changelogs under ``path``, compacted
-        by the shared generation-swap machinery):
+        State (both signed parquet changelogs under ``path``, under the
+        changelog rule in :meth:`stream`):
 
         - ``{path}/bands`` — the minhash band table (identical to
           kind="minhash");
@@ -1186,38 +1297,23 @@ class StreamingCollection:
         Returns the cluster rid for :meth:`clusters_df` /
         :meth:`cluster_probe`; ``stop()`` cleans up both changelogs."""
         from ..operators import dedup as _dedup
-        from pyspark.sql.types import (ArrayType, IntegerType, LongType,
-                                       StructField, StructType)
+        from pyspark.sql.types import (IntegerType, LongType, StructField,
+                                       StructType)
 
         rid = f"clu-{uuid.uuid4().hex[:8]}"
         base = path.rstrip("/")
-        id_type = next(f.dataType for f in self.cdc_schema.fields
-                       if f.name == id_col)
-        bstate = {"path": f"{base}/bands", "base": f"{base}/bands",
-                  "gen": 0, "retired": [], "kind": "minhash",
-                  "schema": StructType([
-                      StructField("id", id_type),
-                      StructField("sign", LongType()),
-                      StructField("band", IntegerType()),
-                      StructField("bh", LongType()),
-                      StructField("sig", ArrayType(LongType())),
-                  ]),
-                  "batches": 0, "compact_every": int(compact_every),
-                  "keep_generations": max(1, int(keep_generations))}
-        lstate = {"path": f"{base}/labels", "base": f"{base}/labels",
-                  "gen": 0, "retired": [], "kind": "labels",
-                  "term": "label", "bucket": "lb",
-                  "schema": StructType([
-                      StructField("id", id_type),
-                      StructField("sign", LongType()),
-                      StructField("label", id_type),
-                      StructField("lb", IntegerType()),
-                  ]),
-                  "batches": 0, "compact_every": int(compact_every),
-                  "keep_generations": max(1, int(keep_generations))}
-        self._indexes[f"{rid}-bands"] = bstate
-        self._indexes[f"{rid}-labels"] = lstate
-        cstate = {"bands": f"{rid}-bands", "labels": f"{rid}-labels",
+        id_type = self.cdc_schema[id_col].dataType
+        bands_log = self._logs[f"{rid}-bands"] = _Changelog(
+            self.spark, f"{base}/bands", _band_schema(id_type), "signed",
+            compact_every, part="band")
+        labels_log = self._logs[f"{rid}-labels"] = _Changelog(
+            self.spark, f"{base}/labels", StructType([
+                StructField("id", id_type),
+                StructField("sign", LongType()),
+                StructField("label", id_type),
+                StructField("lb", IntegerType()),
+            ]), "signed", compact_every, part="lb")
+        cstate = {"bands": bands_log, "labels": labels_log,
                   "id_col": id_col, "text_col": text_col,
                   "num_perm": num_perm, "bands_n": bands,
                   "shingle_k": shingle_k, "unit": unit,
@@ -1233,59 +1329,21 @@ class StreamingCollection:
                 batch_df, id_col, text_col, num_perm, shingle_k, unit,
                 hash_fn, band_keys).persist()
             try:
-                delta.write.mode("append").partitionBy("band") \
-                    .parquet(bstate["path"])
-                bstate["batches"] += 1
+                bands_log.append(delta)
                 self._update_cluster_labels(cstate, delta)
             finally:
                 delta.unpersist()
 
-        ckpt = os.path.join(self.workdir, f"ckpt-{rid}")
-        q = (
-            self._cdc_stream().writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        self._queries[rid] = q
-        q.processAllAvailable()
+        self._start_query(rid, self._cdc_stream(), sink)
         return rid
 
-    def _net_index(self, state: dict,
-                   semi: DataFrame | None = None,
-                   on: list[str] | None = None,
-                   where: Column | None = None) -> DataFrame:
-        """Net-positive rows of a signed changelog state (current
-        generation; empty-schema frame before the first write).
-
-        ``semi``/``on`` (left-semi filter) and ``where`` (predicate on
-        group-key columns) are optional PRE-netting filters. The netting
-        group key contains every non-sign column, so filtering on key
-        columns COMMUTES with netting — the cluster-maintenance hot path
-        uses this to bound every per-batch netting shuffle by the
-        delta's (band, bh) buckets / touched ids / affected labels
-        instead of the whole corpus (r10 review of maintain_clusters)."""
-        if not os.path.isdir(state["path"]):
-            return self.spark.createDataFrame([], state["schema"])
-        df = self.spark.read.parquet(state["path"])
-        if semi is not None:
-            df = df.join(semi.select(*on).distinct(), on, "left_semi")
-        if where is not None:
-            df = df.filter(where)
-        keys = [c for c in df.columns if c != "sign"]
-        return (df.groupBy(*keys)
-                .agg(F.sum("sign").alias("__net"))
-                .filter(F.col("__net") > 0)
-                .drop("__net"))
-
-    def _append_labels(self, lstate: dict, rows: DataFrame) -> None:
+    @staticmethod
+    def _append_labels(labels: _Changelog, rows: DataFrame) -> None:
         """Append signed (id, sign, label) rows (lb bucket derived) to
-        the labels changelog, following compaction repoints."""
-        out = rows.select(
+        the labels changelog."""
+        labels.append(rows.select(
             "id", F.col("sign").cast("long").alias("sign"), "label",
-            F.pmod(F.xxhash64("label"), F.lit(16)).cast("int").alias("lb"))
-        out.write.mode("append").partitionBy("lb").parquet(lstate["path"])
-        lstate["batches"] += 1
+            F.pmod(F.xxhash64("label"), F.lit(16)).cast("int").alias("lb")))
 
     def _update_cluster_labels(self, cstate: dict,
                                delta: DataFrame) -> None:
@@ -1293,8 +1351,7 @@ class StreamingCollection:
         (see :meth:`maintain_clusters` — splits first, then merges)."""
         from ..operators import dedup as _dedup
 
-        bstate = self._indexes[cstate["bands"]]
-        lstate = self._indexes[cstate["labels"]]
+        bands, labels = cstate["bands"], cstate["labels"]
         num_perm, thr = cstate["num_perm"], cstate["threshold"]
         # delta-bounded summary of which ids lost / gained content —
         # kept as a DATAFRAME feeding semi-/anti-joins, never collected
@@ -1309,17 +1366,16 @@ class StreamingCollection:
 
             # every labels read below nets a BOUNDED slice of the
             # changelog (semi-filter on group-key columns commutes with
-            # netting — r10 review: the full _net_labels per batch was
+            # netting — r10 review: netting all labels per batch was
             # the one remaining corpus-sized exchange in this hot path)
 
             # ---- step 1: SPLITS — re-cluster components that lost edges
             if neg_ids.head(1):
-                aff = (self._net_labels(lstate, semi=neg_ids, on=["id"])
+                aff = (labels.net(semi=neg_ids, on=["id"])
                        .select("label").distinct().persist())
                 try:
                     if aff.head(1):
-                        n_old = self._net_labels(lstate, semi=aff,
-                                                 on=["label"])
+                        n_old = labels.net(semi=aff, on=["label"])
                         gone = sgn.filter((F.col("mn") < 0)
                                           & (F.col("mx") <= 0)).select("id")
                         has_gone = bool(gone.head(1))
@@ -1327,8 +1383,7 @@ class StreamingCollection:
                                   if has_gone else n_old)
                         # netting bounded by the affected components'
                         # member ids (semi commutes with netting)
-                        member_bands = self._net_index(bstate, semi=n_live,
-                                                       on=["id"])
+                        member_bands = bands.net(semi=n_live, on=["id"])
                         edges = _band_edges(member_bands, member_bands,
                                             num_perm, thr)
                         comp = _dedup.connected_components(edges, "a", "b")
@@ -1351,7 +1406,7 @@ class StreamingCollection:
                         if removed is not None:
                             upd = upd.unionByName(removed.select(
                                 "id", F.lit(-1).alias("sign"), "label"))
-                        self._append_labels(lstate, upd)
+                        self._append_labels(labels, upd)
                 finally:
                     aff.unpersist()
 
@@ -1367,14 +1422,14 @@ class StreamingCollection:
         # netting bounded by the delta's (band, bh) buckets — only rows
         # that could possibly join the probe are netted, so the per-batch
         # exchange scales with the delta, not the corpus
-        live = self._net_index(bstate, semi=probe, on=["band", "bh"])
+        live = bands.net(semi=probe, on=["band", "bh"])
         # edges feed three bounded reads below — persist so the banded
         # join runs once
         edges = _band_edges(probe, live, num_perm, thr).persist()
         try:
             eps = edges.select(F.col("a").alias("id")).unionByName(
                 edges.select(F.col("b").alias("id")))
-            lab_sub = self._net_labels(lstate, semi=eps, on=["id"])
+            lab_sub = labels.net(semi=eps, on=["id"])
             la = lab_sub.select(F.col("id").alias("a"),
                                 F.col("label").alias("la"))
             lb_ = lab_sub.select(F.col("id").alias("b"),
@@ -1418,14 +1473,14 @@ class StreamingCollection:
         if len(remap) > _REMAP_LITERAL_MAX:
             from pyspark.sql.types import StructField, StructType
 
-            lsch = lstate["schema"]
+            lsch = labels.schema
             remap_df = local_frame(
                 self.spark, list(remap.items()),
                 StructType([StructField("label", lsch["label"].dataType),
                             StructField("__new", lsch["label"].dataType)]))
         if remap_df is not None:
-            rewrite = self._net_labels(
-                lstate, semi=remap_df, on=["label"]).join(remap_df, "label")
+            rewrite = labels.net(semi=remap_df, on=["label"]).join(
+                remap_df, "label")
             upds.append(rewrite.select(
                 "id", F.lit(-1).alias("sign"), "label"))
             upds.append(rewrite.select(
@@ -1434,8 +1489,8 @@ class StreamingCollection:
         elif remap:
             mapping = F.create_map(
                 *[F.lit(x) for kv in remap.items() for x in kv])
-            rewrite = self._net_labels(
-                lstate, where=F.col("label").isin(list(remap.keys())))
+            rewrite = labels.net(
+                where=F.col("label").isin(list(remap.keys())))
             upds.append(rewrite.select(
                 "id", F.lit(-1).alias("sign"), "label"))
             upds.append(rewrite.select(
@@ -1450,7 +1505,7 @@ class StreamingCollection:
         # to the driver, so an add_bulk backfill of millions of docs
         # stays executor-side.
         new_rows = probe.select("id").distinct().join(
-            self._net_labels(lstate, semi=probe, on=["id"]).select("id"),
+            labels.net(semi=probe, on=["id"]).select("id"),
             "id", "left_anti")
         # the branch folds into the single append-union UNCONDITIONALLY
         # (r12, verdict r11 next #7): the former `new_rows.head(1)`
@@ -1479,16 +1534,7 @@ class StreamingCollection:
             out = upds[0]
             for u in upds[1:]:
                 out = out.unionByName(u)
-            self._append_labels(lstate, out)
-
-    def _net_labels(self, lstate: dict,
-                    semi: DataFrame | None = None,
-                    on: list[str] | None = None,
-                    where: Column | None = None) -> DataFrame:
-        """Current netted (id, label) cluster rows; ``semi``/``where``
-        bound the netting (see :meth:`_net_index`)."""
-        return self._net_index(lstate, semi=semi, on=on,
-                               where=where).select("id", "label")
+            self._append_labels(labels, out)
 
     def clusters_df(self, rid: str) -> DataFrame:
         """Current near-dup cluster membership ``(id, label)`` of a
@@ -1498,7 +1544,7 @@ class StreamingCollection:
         singletons by definition (no shingles or no near-dups' edges
         retracted them) — treat absence as label = own id."""
         self._drain_at_read()
-        return self._net_labels(self._indexes[self._clusters[rid]["labels"]])
+        return self._clusters[rid]["labels"].net().select("id", "label")
 
     def cluster_probe(self, rid: str, queries: DataFrame,
                       text_col: str | None = None,
@@ -1514,7 +1560,7 @@ class StreamingCollection:
 
         self._drain_at_read()
         c = self._clusters[rid]
-        idx = self._net_index(self._indexes[c["bands"]])
+        idx = c["bands"].net()
         hits = _dedup.minhash_probe(
             idx, queries,
             text_col=text_col or c["text_col"],
@@ -1522,7 +1568,7 @@ class StreamingCollection:
             num_perm=c["num_perm"], bands=c["bands_n"],
             k=c["shingle_k"], threshold=c["threshold"],
             unit=c["unit"], hash_fn=c["hash_fn"])
-        lab = self._net_labels(self._indexes[c["labels"]]).select(
+        lab = c["labels"].net().select(
             F.col("id").alias("corpus_id"), "label")
         return (
             hits.join(lab, "corpus_id", "left")
@@ -1535,7 +1581,6 @@ class StreamingCollection:
     def maintain_ngram_lm(self, path: str, n: int = 4,
                           text_col: str = "text", id_col: str = "doc_id",
                           compact_every: int = 64,
-                          keep_generations: int = 1,
                           tokenizer: str = "base") -> str:
         """Incrementally-maintained order-``n`` stupid-backoff LM (r10 —
         the streaming extension of :func:`aggo_spark.operators.text.
@@ -1547,8 +1592,8 @@ class StreamingCollection:
         grams with sign −1, so the net model count is
         ``sum(sign · cnt)`` and retracted docs fall out of the model
         exactly as if it had been retrained on the live corpus
-        (equality-tested). Compaction rides the shared generation-swap
-        machinery (kind="ngram" nets by weighted sign).
+        (equality-tested). Each table is a changelog under the rule in
+        :meth:`stream`, netted by weighted sign.
 
         Derived tables (``ctx_k`` = prefix sums of netted ``gram_k``,
         ``uni``/meta from ``gram_2``) are computed at read — identical
@@ -1572,12 +1617,9 @@ class StreamingCollection:
                 + [StructField("sign", LongType()),
                    StructField("cnt", LongType()),
                    StructField("gb", IntegerType())])
-            self._indexes[f"{rid}-g{k}"] = {
-                "path": f"{base}/gram_{k}", "base": f"{base}/gram_{k}",
-                "gen": 0, "retired": [], "kind": "ngram",
-                "gram_cols": gcols, "schema": schema, "batches": 0,
-                "compact_every": int(compact_every),
-                "keep_generations": max(1, int(keep_generations))}
+            self._logs[f"{rid}-g{k}"] = _Changelog(
+                self.spark, f"{base}/gram_{k}", schema, "weighted",
+                compact_every, part="gb")
         self._lms[rid] = {"n": n, "text_col": text_col,
                           "id_col": id_col, "tokenizer": tokenizer}
 
@@ -1585,8 +1627,7 @@ class StreamingCollection:
             if batch_df.isEmpty():
                 return
             for k in range(2, n + 1):
-                st = self._indexes[f"{rid}-g{k}"]
-                gcols = st["gram_cols"]
+                gcols = [f"t{i + 1}" for i in range(k)]
                 # the CDC sign column rides through the gram explode in
                 # the id slot — one explode per order, batch-sized
                 gr = _gram_rows_n(batch_df, k, text_col, _SIGN,
@@ -1599,35 +1640,10 @@ class StreamingCollection:
                     .withColumn("gb", F.pmod(F.xxhash64(*gcols),
                                              F.lit(16)).cast("int"))
                 )
-                delta.write.mode("append").partitionBy("gb") \
-                    .parquet(st["path"])
-                st["batches"] += 1
+                self._logs[f"{rid}-g{k}"].append(delta)
 
-        ckpt = os.path.join(self.workdir, f"ckpt-{rid}")
-        q = (
-            self._cdc_stream().writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        self._queries[rid] = q
-        q.processAllAvailable()
+        self._start_query(rid, self._cdc_stream(), sink)
         return rid
-
-    def _net_counts(self, state: dict) -> DataFrame:
-        """Net model counts of an ngram changelog state:
-        ``sum(sign · cnt)`` per gram, positives only."""
-        gcols = state["gram_cols"]
-        if not os.path.isdir(state["path"]):
-            empty = self.spark.createDataFrame([], state["schema"])
-            return empty.groupBy(*gcols).agg(
-                F.sum(F.col("sign") * F.col("cnt")).alias("cnt"))
-        return (
-            self.spark.read.parquet(state["path"])
-            .groupBy(*gcols)
-            .agg(F.sum(F.col("sign") * F.col("cnt")).alias("cnt"))
-            .filter(F.col("cnt") > 0)
-        )
 
     def lm_tables(self, rid: str) -> dict:
         """Current model tables of a :meth:`maintain_ngram_lm` state, in
@@ -1638,8 +1654,8 @@ class StreamingCollection:
         n = self._lms[rid]["n"]
         tables: dict = {}
         for k in range(2, n + 1):
-            gk = self._net_counts(self._indexes[f"{rid}-g{k}"])
             gcols = [f"t{i + 1}" for i in range(k)]
+            gk = self._logs[f"{rid}-g{k}"].net().select(*gcols, "cnt")
             tables[f"gram_{k}"] = gk
             tables[f"ctx_{k}"] = gk.groupBy(*gcols[:-1]).agg(
                 F.sum("cnt").alias("cnt"))
@@ -1672,90 +1688,10 @@ class StreamingCollection:
             broadcast_model=broadcast_model,
             tokenizer=lm.get("tokenizer", "base"))
 
-    def _compact_indexes(self) -> None:
-        """Driver-side posting-index compaction (called from flush, after
-        every query has drained): rewrite each due index changelog to its
-        net-positive postings in a NEW generation directory and repoint
-        (generation swap, r8 — never an in-place rmtree+rename, so index
-        DataFrames built against the previous generation keep resolving
-        their part-files; they are stale snapshots, not FileNotFound).
-        Running here — not in the index's foreachBatch — keeps the
-        repoint out of the streaming thread, so reads between flushes
-        never race it. The last ``keep_generations`` retired generations
-        are kept on disk (default 1 — released at the next compaction;
-        the final ones at stop())."""
-        import shutil
-
-        for state in self._indexes.values():
-            if state["batches"] < state["compact_every"]:
-                continue
-            path = state["path"]
-            if state["kind"] == "minhash":
-                # net band rows by (id, band, bh, sig) — sig is NOT
-                # functionally dependent on (id, band, bh): a remove +
-                # re-add of an edited doc shares band hashes for every
-                # unchanged signature slice, and netting without sig in
-                # the key could keep the OLD signature (r8 review). With
-                # sig in the key, the old doc's rows net to 0 and only
-                # the live signature survives.
-                part = "band"
-                net = (
-                    self.spark.read.parquet(path)
-                    .groupBy("id", "band", "bh", "sig")
-                    .agg(F.sum("sign").cast("long").alias("sign"))
-                    .filter(F.col("sign") > 0)
-                    .select("id", "sign", "band", "bh", "sig")
-                )
-            elif state["kind"] == "ngram":
-                # weighted netting: model count = sum(sign * cnt) per
-                # gram; survivors rewrite as one (sign=1, cnt=net) row
-                gcols = state["gram_cols"]
-                part = "gb"
-                net = (
-                    self.spark.read.parquet(path)
-                    .groupBy(*gcols)
-                    .agg(F.sum(F.col("sign") * F.col("cnt"))
-                         .cast("long").alias("cnt"))
-                    .filter(F.col("cnt") > 0)
-                    .select(*gcols, F.lit(1).cast("long").alias("sign"),
-                            "cnt",
-                            F.pmod(F.xxhash64(*gcols),
-                                   F.lit(16)).cast("int").alias("gb"))
-                )
-            else:
-                term, bucket = state["term"], state["bucket"]
-                part = bucket
-                net = (
-                    self.spark.read.parquet(path)
-                    .groupBy(term, bucket, "id")
-                    .agg(F.sum("sign").cast("long").alias("sign"))
-                    .filter(F.col("sign") > 0)
-                    .select("id", "sign", term, bucket)
-                )
-            state["gen"] += 1
-            new_dir = f"{state['base']}-g{state['gen']}"
-            net.write.mode("overwrite").partitionBy(part).parquet(new_dir)
-            with self._lock:
-                state["retired"].append(state["path"])
-                state["path"] = new_dir  # future appends + index_df follow
-                # r9 (ADVICE): bound on-disk retired generations — a
-                # keep_generations-deep grace window (default 1) preserves
-                # the stale-snapshot guarantee for index_df readers built
-                # between flushes, instead of one full index copy per
-                # compaction for the collection's lifetime. Slow consumers
-                # holding a snapshot across multiple compactions pass a
-                # larger keep_generations at maintain_index() (r10 ADVICE).
-                keep = state.get("keep_generations", 1)
-                stale = state["retired"][:-keep]
-                state["retired"] = state["retired"][-keep:]
-            for d in stale:
-                shutil.rmtree(d, ignore_errors=True)
-            state["batches"] = 1
-
     def index_path(self, rid: str) -> str:
         """Current generation directory of a maintained posting index
         (repointed by compaction — see :meth:`maintain_index`)."""
-        return self._indexes[rid]["path"]
+        return self._logs[rid].path
 
     def index_df(self, rid: str) -> DataFrame:
         """Fresh read of a maintained posting index's CURRENT generation —
@@ -1766,10 +1702,7 @@ class StreamingCollection:
         yet) this returns an EMPTY frame with the index schema instead
         of raising (r8 review)."""
         self._drain_at_read()
-        state = self._indexes[rid]
-        if not os.path.isdir(state["path"]):
-            return self.spark.createDataFrame([], state["schema"])
-        return self.spark.read.parquet(state["path"])
+        return self._logs[rid].read()
 
     def _append_keyed_delta(self, reg: _Registered, out: DataFrame,
                             dirty: list, batch: int) -> None:
@@ -1799,32 +1732,8 @@ class StreamingCollection:
             "__live", F.lit(0).cast("int"))
         fresh = out.select(*user_cols).withColumn(
             "__live", F.lit(1).cast("int"))
-        (fresh.unionByName(tombstones)
-         .withColumn("__batch", _batch_lit(batch))
-         .write.mode("append").parquet(reg.result_dir))
-        reg.sink_batches += 1
-
-    def _changelog(self, reg: _Registered) -> DataFrame:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        log_schema = StructType(list(reg.result_schema.fields) + [
-            StructField("__live", IntegerType()),
-            StructField("__batch", _BATCH_TYPE),
-        ])
-        return self.spark.read.schema(log_schema).parquet(reg.result_dir)
-
-    def _winning_rows(self, reg: _Registered, log: DataFrame) -> DataFrame:
-        """Latest changelog row per ``_id`` (appending regs), keeping the
-        ``__live``/``__batch`` markers; full-overwrite-only regs have no
-        superseded rows, so no window is needed."""
-        if reg.incremental or reg.keyed_field is not None:
-            from pyspark.sql import Window as W
-
-            w = W.partitionBy("_id").orderBy(
-                F.desc("__batch"), F.desc("__live"))
-            log = (log.withColumn("__rn", F.row_number().over(w))
-                   .filter(F.col("__rn") == 1).drop("__rn"))
-        return log
+        reg.log.append(fresh.unionByName(tombstones)
+                       .withColumn("__batch", _batch_lit(batch)))
 
     def _drain_at_read(self) -> None:
         """Read-your-writes barrier for every read point: drain pending
@@ -1836,17 +1745,6 @@ class StreamingCollection:
         with self._flush_lock:
             if self._pending and not self._in_flush:
                 self.flush()
-
-    def _snapshot_df(self, reg: _Registered) -> DataFrame:
-        """The snapshot view over ``reg``'s parquet changelog, with NO
-        drain barrier — the form the streaming-thread sink hands to
-        callbacks (taking the flush lock there would deadlock against
-        processAllAvailable)."""
-        user_cols = [f.name for f in reg.result_schema.fields]
-        if not os.path.isdir(reg.result_dir):
-            return self.spark.createDataFrame([], reg.result_schema)
-        log = self._winning_rows(reg, self._changelog(reg))
-        return log.filter(F.col("__live") == 1).select(*user_cols)
 
     def result_df(self, rid: str) -> DataFrame:
         """The registered pipeline's current result as a (lazy) DataFrame —
@@ -1860,42 +1758,16 @@ class StreamingCollection:
             raise ValueError(
                 f"pipeline {rid!r} uses the list sink; call result() "
                 f"(register with sink='parquet' for a DataFrame result)")
-        return self._snapshot_df(reg)
+        return reg.log.net()
 
     def compact_result(self, rid: str) -> None:
-        """Rewrite the parquet changelog down to its winning live rows
-        (markers preserved so later appends still order correctly) — the
-        local analogue of Delta OPTIMIZE; called automatically every
-        ``compact_every`` appends. Generation-swap based: the compacted
-        rows land in a NEW generation directory and ``reg.result_dir`` is
-        repointed, so a previously returned ``result_df`` (whose file
-        index resolved the OLD generation's part-files) stays a valid —
-        just stale — snapshot instead of hitting FileNotFound mid-query.
-        Only the immediately previous generation is kept on disk (r9
-        ADVICE: released at the NEXT compaction, the final one at
-        ``stop()`` — a one-generation grace period, not one copy per
-        compaction for the collection's lifetime). At scale this is a
-        table format's transactional OPTIMIZE + snapshot isolation."""
-        import shutil
-
-        reg = self._registered[rid]
-        if reg.sink != "parquet" or not os.path.isdir(reg.result_dir):
-            return
-        winners = self._winning_rows(reg, self._changelog(reg)).filter(
-            F.col("__live") == 1)
-        reg.result_gen += 1
-        base = os.path.join(self.workdir, f"result-{reg.id}")
-        new_dir = f"{base}-g{reg.result_gen}"
-        winners.write.mode("overwrite").parquet(new_dir)
-        with self._lock:
-            reg.retired_dirs.append(reg.result_dir)
-            reg.result_dir = new_dir  # future appends follow the reg attr
-            keep = reg.keep_generations
-            stale = reg.retired_dirs[:-keep]
-            reg.retired_dirs = reg.retired_dirs[-keep:]
-        for d in stale:
-            shutil.rmtree(d, ignore_errors=True)
-        reg.sink_batches = 1
+        """Compact the parquet changelog of ``rid`` now (the local
+        analogue of Delta OPTIMIZE; ``flush()`` calls it every
+        ``compact_every`` appends) — a generation swap under the
+        changelog rule in :meth:`stream`."""
+        log = self._registered[rid].log
+        if log is not None:
+            log.compact()
 
     def result(self, rid: str) -> list[dict]:
         """Current result rows. For ``sink="parquet"`` registrations this
@@ -1928,8 +1800,6 @@ class StreamingCollection:
         return self._live_rows_df().count()
 
     def stop(self) -> None:
-        import shutil
-
         # under the flush lock: a deadline flush in progress on the timer
         # thread must complete before queries stop, or q.stop() interrupts
         # its in-flight micro-batch write mid-append
@@ -1942,18 +1812,11 @@ class StreamingCollection:
             for q in self._queries.values():
                 q.stop()
             self._queries.clear()
-        # retired changelog generations were kept on disk so result_df
-        # snapshots handed out before a compaction stayed readable; the
+        # retired changelog generations were kept on disk so snapshots
+        # handed out before a compaction stayed readable; the
         # collection's lifetime is over, release them
-        for reg in self._registered.values():
-            for d in reg.retired_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-            reg.retired_dirs.clear()
-        # same lifetime rule for retired posting-index generations
-        for state in self._indexes.values():
-            for d in state["retired"]:
-                shutil.rmtree(d, ignore_errors=True)
-            state["retired"].clear()
+        for log in self._logs.values():
+            log.release()
 
     # camelCase alias for API parity with the reference (streaming.ts:162)
     addBulk = add_bulk

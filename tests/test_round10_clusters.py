@@ -171,7 +171,7 @@ class TestIncrementalClusters:
                 str(tmp_path / "clu4"), compact_every=100, **PARAMS)
             for i in range(1, 5):
                 coll.add(_doc(i, f"{S1} unique suffix {i}"))
-            lpath = coll._indexes[coll._clusters[rid]["labels"]]["path"]
+            lpath = coll._clusters[rid]["labels"].path
             n_rows_before = spark.read.parquet(lpath).count()
             coll.add(_doc(50, S3))
             prog = coll._queries[rid].lastProgress
@@ -195,9 +195,9 @@ class TestIncrementalClusters:
             coll.add(_doc(3, S1))
             coll.add(_doc(1, S1 + "tail"))   # merges, relabels 3 -> 1
             coll.add(_doc(8, S2))
-            lstate = coll._indexes[coll._clusters[rid]["labels"]]
-            comp_path = lstate["path"]
-            assert comp_path != lstate["base"]  # compaction repointed
+            labels = coll._clusters[rid]["labels"]
+            comp_path = labels.path
+            assert comp_path != labels.base  # compaction repointed
             raw = spark.read.parquet(comp_path)
             # compacted: net-positive rows only, one per live doc
             assert raw.filter(F.col("sign") <= 0).count() == 0

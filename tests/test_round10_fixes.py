@@ -12,8 +12,6 @@ Covered here:
   (ADVICE: exact smoothed NB gives unseen buckets log(denom_n/denom_p),
   not 0) — exact-mode scoring matches a numpy mirror; default mode
   unchanged.
-- maintain_index/stream keep_generations (ADVICE: slow consumers could
-  not extend the one-generation compaction grace period).
 
 See test_round10_lm.py for the order-n persisted LM (verdict #2) and
 test_streaming (incremental CC) for verdict #3.

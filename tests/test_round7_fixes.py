@@ -400,11 +400,6 @@ class TestFacetScansSourceOnce:
         assert [r["v"] for r in row.top] == [3, 2]
         assert row.stats[0]["s"] == 6
 
-        # opt-out restores per-branch pushdown scans
-        out2 = Engine(facet_reuse_source=False).aggregate(df, self.PIPE)
-        plan2 = out2._jdf.queryExecution().executedPlan().toString()
-        assert plan2.count("Scan parquet") == 3
-
 
 class TestSaltedCollectList:
     """judge r6 #5 support: collect_list is the genuinely skew-prone agg
@@ -858,24 +853,24 @@ class TestReviewPassFixes:
             held = c.result_df("g")
             n_before = held.count()
             reg = c._registered["g"]
-            gen0 = reg.result_dir
-            # force a compaction: sink_batches reaches compact_every
+            gen0 = reg.log.path
+            # force a compaction: the log's batches reach compact_every
             c.add({"category": "b", "price": 2.0, "qty": 1})
-            assert reg.result_gen >= 1 and reg.result_dir != gen0
+            assert reg.log.gen >= 1 and reg.log.path != gen0
             # ONE compaction after the snapshot: the held (pre-compaction)
             # snapshot still reads — stale, not FileNotFound (the r9
             # one-generation grace period, ADVICE r8)
-            assert gen0 in reg.retired_dirs and _os.path.isdir(gen0)
+            assert gen0 in reg.log.retired and _os.path.isdir(gen0)
             assert held.count() == n_before
             c.add({"category": "a", "price": 3.0, "qty": 1})
             # disk stays bounded: at most one retired generation on disk
             # regardless of how many compactions have run
-            assert len(reg.retired_dirs) <= 1
-            if reg.retired_dirs != [gen0]:
+            assert len(reg.log.retired) <= 1
+            if reg.log.retired != [gen0]:
                 assert not _os.path.isdir(gen0)
             fresh = {r["_id"]: r["n"] for r in c.result_df("g").collect()}
             assert fresh == {"a": 2, "b": 1}
-            retired = list(reg.retired_dirs)
+            retired = list(reg.log.retired)
         finally:
             c.stop()
         for d in retired:

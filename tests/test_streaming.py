@@ -716,6 +716,60 @@ def test_spool_file_appears_whole(spark, tmp_path, monkeypatch):
         c.stop()
 
 
+def test_eager_write_during_compaction_is_kept(spark, tmp_path, monkeypatch):
+    """A second writer's eager add must not reach a changelog generation
+    that a running compaction has already read. Compaction is held right
+    after its read (at its new-generation write); a writer thread adds a
+    doc, its spool file is awaited (bounded) and drained into the view,
+    and then compaction goes on. Every live doc must be in the result."""
+    import threading
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    c = StreamingCollection(spark, DOC_SCHEMA, workdir=str(tmp_path))
+    try:
+        c.stream(GROUP_PIPELINE, "g", sink="parquet", compact_every=2)
+        q = c._queries["g"]
+        late = {"category": "late", "price": 1.0, "qty": 1}
+        held = {}
+        write = DataFrameWriter.parquet
+
+        def spool_files():
+            return [p for p in os.listdir(c.data_dir)
+                    if p.startswith("batch-")]
+
+        def held_write(self, path, *args, **kwargs):
+            if not held and path.endswith("-g1"):
+                n = len(spool_files())
+                held["writer"] = threading.Thread(target=c.add, args=(late,))
+                held["writer"].start()
+                deadline = time.monotonic() + 3.0
+                while (len(spool_files()) == n
+                       and time.monotonic() < deadline):
+                    time.sleep(0.02)
+                q.processAllAvailable()
+            return write(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", held_write)
+        docs = [{"category": k, "price": 1.0, "qty": 1} for k in "abcdef"]
+        added = []
+        for d in docs:
+            c.add(d)
+            added.append(d["category"])
+            if held:
+                break
+        assert held, "no compaction ran"
+        held["writer"].join(timeout=120)
+        assert not held["writer"].is_alive()
+        monkeypatch.undo()
+        got = by_id(c.result("g"))
+        assert set(got) == set(added) | {"late"}
+        assert all(r["n"] == 1 for r in got.values())
+    finally:
+        c.stop()
+
+
 def test_materialize_stream_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
     import json as _json
     import tempfile
@@ -846,7 +900,7 @@ class TestParquetResultSink:
             for i in range(12):
                 coll.add({"k": "ab"[i % 2], "v": i})
             reg = coll._registered["g"]
-            assert reg.sink_batches < 4 + 1  # compaction kept it bounded
+            assert reg.log.batches < 4 + 1  # compaction kept it bounded
             got = {r["_id"]: r["n"] for r in coll.result("g")}
             assert got == {"a": 6, "b": 6}
             # a post-compaction mutation still lands correctly
@@ -941,7 +995,7 @@ class TestIncrementalIndexMaintenance:
             # one retired generation kept, not one per compaction)
             import os as _os
             if coll.index_path(rid) != held_path:
-                retired = coll._indexes[rid]["retired"]
+                retired = coll._logs[rid].retired
                 assert len(retired) <= 1
                 if held_path not in retired:
                     assert not _os.path.isdir(held_path)
@@ -954,7 +1008,7 @@ class TestIncrementalIndexMaintenance:
                    search_with_index(corpus, idx, "alpha").collect()}
             assert got == {2, 3}
             cur = coll.index_path(rid)
-            last_retired = list(coll._indexes[rid]["retired"])
+            last_retired = list(coll._logs[rid].retired)
         finally:
             coll.stop()
         # the final retired generation is released at stop(); the
@@ -964,36 +1018,35 @@ class TestIncrementalIndexMaintenance:
             assert not _os.path.isdir(d)
         assert _os.path.isdir(cur)
 
-    def test_keep_generations_extends_grace(self, spark, tmp_path):
-        """r10 ADVICE: keep_generations=2 keeps a snapshot valid across
-        TWO compactions (the default 1 releases it after the second)."""
-        import os as _os
+    def test_ngram_compaction_nets_weighted_counts(self, spark, tmp_path):
+        """n-gram tables compact by weighted netting: after adds and a
+        remove past ``compact_every`` the table sits in a new generation
+        and its counts equal the model retrained on the live docs."""
+        from aggo_spark.operators import text
 
+        docs = {1: "the quick brown fox jumps over the lazy dog",
+                2: "the quick brown cat sleeps under the warm sun",
+                3: "the quick brown fox runs through the green field"}
         coll = StreamingCollection(
             spark, "doc_id long, text string", workdir=str(tmp_path))
         try:
-            idx_path = str(tmp_path / "textidx2")
-            coll.add({"doc_id": 1, "text": "alpha beta"})
-            rid = coll.maintain_index(idx_path, kind="text",
-                                      compact_every=2, keep_generations=2)
-            coll.add({"doc_id": 2, "text": "alpha gamma"})
-            held = coll.index_df(rid)
-            held_path = coll.index_path(rid)
-            # each further add crosses compact_every=2 -> a compaction
-            coll.add({"doc_id": 3, "text": "alpha delta"})
-            assert coll.index_path(rid) != held_path
-            coll.add({"doc_id": 4, "text": "alpha eps"})
-            # TWO compactions after held was taken: with the default
-            # keep_generations=1 its dir would be gone by now (see
-            # test_compaction_nets_postings); with 2 it survives
-            retired = coll._indexes[rid]["retired"]
-            assert len(retired) <= 2
-            assert _os.path.isdir(held_path)
-            assert held.count() > 0
-            # the THIRD compaction finally releases it (window slid past)
-            coll.add({"doc_id": 5, "text": "alpha zeta"})
-            assert held_path not in coll._indexes[rid]["retired"]
-            assert not _os.path.isdir(held_path)
+            rid = coll.maintain_ngram_lm(str(tmp_path / "lm"), n=2,
+                                         compact_every=2)
+            base = coll.index_path(f"{rid}-g2")
+            for i, t in docs.items():
+                coll.add({"doc_id": i, "text": t})
+            coll.remove({"doc_id": 2, "text": docs[2]})
+            assert coll.index_path(f"{rid}-g2") != base
+            live = spark.createDataFrame(
+                [(i, t) for i, t in docs.items() if i != 2],
+                "doc_id long, text string")
+            want = text._ngram_model_tables(live, 2, "text", "doc_id")
+            got = coll.lm_tables(rid)
+            for name, cols in (("gram_2", ["t1", "t2"]), ("ctx_2", ["t1"])):
+                assert ({tuple(r[c] for c in cols): r["cnt"]
+                         for r in got[name].collect()}
+                        == {tuple(r[c] for c in cols): r["cnt"]
+                            for r in want[name].collect()}), name
         finally:
             coll.stop()
 
